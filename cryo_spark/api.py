@@ -548,12 +548,14 @@ def _freeze_impl(
     n_row_groups: int | None = None,
     stats: bool = True,
     report_dir: str | None = None,
+    max_concurrent_chunks: int = 4,
     **dims,
 ) -> dict:
     """Freeze datasets to chunked files (reference `cryo.freeze` /
     CLI): one file per chunk named
     `{network}__{datatype}__{stub}.{ext}`, skip-existing unless
-    overwrite, JSON run report. Returns the summary dict
+    overwrite, JSON run report. Up to ``max_concurrent_chunks``
+    datatypes freeze at once. Returns the summary dict
     (FreezeSummary — reports.rs:18-23)."""
     if isinstance(datatypes, str):
         datatypes = [datatypes]
@@ -666,15 +668,16 @@ def _freeze_impl(
         )
 
     # datatypes freeze CONCURRENTLY (reference: chunks run under a
-    # max_concurrent_chunks=4 semaphore, sources.rs:113): Spark job
+    # max_concurrent_chunks semaphore, sources.rs:113): Spark job
     # submission is thread-safe and concurrent jobs share the
     # executors, overlapping one dataset's write/commit latency with
     # another's compute. Results merge in declaration order so
     # summaries stay deterministic.
-    if len(q.datatypes) > 1:
+    width = min(len(q.datatypes), max_concurrent_chunks)
+    if width > 1:
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=min(len(q.datatypes), 4)) as ex:
+        with ThreadPoolExecutor(max_workers=width) as ex:
             results = list(ex.map(_freeze_one, q.datatypes))
     else:
         results = [_freeze_one(dt) for dt in q.datatypes]
@@ -905,6 +908,7 @@ def main(argv: list[str] | None = None) -> int:
         report_dir=args.report_dir, compression=args.compression,
         row_group_size=args.row_group_size, n_row_groups=args.n_row_groups,
         stats=not args.no_stats, source=source,
+        max_concurrent_chunks=args.max_concurrent_chunks,
         **dims,
     )
     print(f"completed: {summary['n_completed']}, skipped: {summary['n_skipped']}")

@@ -12,16 +12,22 @@ Mirrors the reference source layer
 
 The Spark scheduler replaces the reference's tokio chunk/request task
 tree (C5): one work-list partition = one task; within a task the
-fetcher batches rows and paces requests. No network is available in
-this environment — the transport is injectable and unit tests use a
-deterministic fake; the default transport is stdlib urllib.
+fetcher batches rows, paces requests and keeps up to
+``max_concurrent_requests`` of them in flight. That bound applies per
+fetch task, the same scope as the token bucket: one task runs per
+Python worker, so a ``local[N]`` run keeps up to
+N x ``max_concurrent_requests`` requests in flight. The transport is
+injectable and unit tests use a deterministic fake; the default
+transport is stdlib urllib.
 """
 
 from __future__ import annotations
 
 import json
+import threading
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
 import pandas as pd
@@ -109,6 +115,8 @@ class RpcConfig:
     when constructed through :meth:`from_env`."""
 
     url: str = "http://localhost:8545"
+    # requests (or batch POSTs) in flight per fetch task, the scope of
+    # the token bucket below; a local[N] run keeps up to N x this many
     max_concurrent_requests: int = 100
     requests_per_second: float | None = None
     max_retries: int = 5
@@ -125,6 +133,10 @@ class RpcConfig:
     # disables batching; typical nodes accept 100-1000. Batching cuts
     # round-trips ~batch_size x for point-lookup-heavy extractions.
     batch_size: int = 1
+
+    def __post_init__(self):
+        if self.max_concurrent_requests < 1:
+            raise ValueError("max_concurrent_requests must be at least 1")
 
     @classmethod
     def from_env(cls, url: str | None = None, **kwargs) -> "RpcConfig":
@@ -167,21 +179,28 @@ def http_transport(config: RpcConfig) -> Transport:  # pragma: no cover - needs 
 
 
 class _Pacer:
-    """Token-bucket rate limiter + retry/backoff (the per-executor
-    analog of governor + RetryBackoffLayer, cli/parse/source.rs:17-40)."""
+    """Token-bucket rate limiter + retry/backoff + bounded request
+    concurrency (the per-executor analog of governor +
+    RetryBackoffLayer + the request semaphore, cli/parse/source.rs:17-40,
+    sources.rs:105-117)."""
 
     def __init__(self, config: RpcConfig):
         self.config = config
         self._next_ok = 0.0
+        self._lock = threading.Lock()
 
     def call(self, transport: Transport, method: str, params: list,
              weight: int = 1) -> dict:
         cfg = self.config
         if cfg.requests_per_second:
-            now = time.monotonic()
-            if now < self._next_ok:
-                time.sleep(self._next_ok - now)
-            self._next_ok = max(now, self._next_ok) + weight / cfg.requests_per_second
+            # reserve the slot under the lock, sleep outside it, so
+            # concurrent callers queue in slot order
+            with self._lock:
+                now = time.monotonic()
+                start = max(now, self._next_ok)
+                self._next_ok = start + weight / cfg.requests_per_second
+            if start > now:
+                time.sleep(start - now)
         backoff = cfg.initial_backoff_s
         if cfg.compute_units_per_second:
             # RetryBackoffLayer semantics: a failed call waits at
@@ -200,9 +219,11 @@ class _Pacer:
         raise AssertionError("unreachable")
 
     def call_many(self, transport: Transport, reqs: list[tuple[str, list]]) -> list:
-        """Dispatch a request list with JSON-RPC batching when both
-        the transport (``.batch``) and the config (``batch_size>1``)
-        support it; otherwise a paced per-request loop. A batch POST
+        """Dispatch a request list, results in request order. A unit is
+        one request, or one JSON-RPC batch POST of ``batch_size``
+        requests when both the transport (``.batch``) and the config
+        support it; up to ``max_concurrent_requests`` units are in
+        flight, each with its own pacing and retry. A batch POST
         charges the token bucket for EVERY inner request it carries —
         CU-metered providers (most) meter per inner request, not per
         HTTP round-trip, so weighting by 1 would overrun the quota by
@@ -211,15 +232,35 @@ class _Pacer:
         cfg = self.config
         batch = getattr(transport, "batch", None)
         if batch is None or cfg.batch_size <= 1:
-            return [self.call(transport, m, p) for m, p in reqs]
-        out: list = []
-        for i in range(0, len(reqs), cfg.batch_size):
-            chunk = reqs[i:i + cfg.batch_size]
-            out.extend(self.call(
-                lambda _m, _p, c=chunk: batch(c), "batch", [],
-                weight=len(chunk),
-            ))
-        return out
+            return self._dispatch([
+                lambda m=m, p=p: self.call(transport, m, p) for m, p in reqs
+            ])
+        chunks = [reqs[i:i + cfg.batch_size] for i in range(0, len(reqs), cfg.batch_size)]
+        results = self._dispatch([
+            lambda c=c: self.call(lambda _m, _p: batch(c), "batch", [], weight=len(c))
+            for c in chunks
+        ])
+        return [r for res in results for r in res]
+
+    def _dispatch(self, units: list[Callable[[], object]]) -> list:
+        """Run ``units`` with at most ``max_concurrent_requests`` in
+        flight and return their results in order. The first unit to
+        exhaust its retries fails the call: queued units are cancelled
+        and the pool's threads are joined before the error propagates."""
+        width = min(self.config.max_concurrent_requests, len(units))
+        if width <= 1:
+            return [u() for u in units]
+        pool = ThreadPoolExecutor(max_workers=width)
+        try:
+            futures = [pool.submit(u) for u in units]
+            wait(futures, return_when=FIRST_EXCEPTION)
+        finally:
+            # cancels only units still queued (none once all have run)
+            # and joins the threads
+            pool.shutdown(cancel_futures=True)
+        # the pool starts units first-in first-out, so every failed
+        # unit precedes every cancelled one: this raises a unit's error
+        return [f.result() for f in futures]
 
 
 def _hex_to_bytes(h: str | None) -> bytes | None:
@@ -295,6 +336,56 @@ def flatten_block(raw: dict, chain_id: int) -> dict:
     }
 
 
+def _fetch_stage(
+    work_list: DataFrame,
+    in_cols: list[str],
+    schema: T.StructType,
+    reqs_fn: Callable[..., list[tuple[str, list]]],
+    assemble_fn: Callable[..., list[dict]],
+    config: RpcConfig | None,
+    transport_factory: Callable[[RpcConfig], Transport] | None,
+    keys_fn: Callable[[pd.DataFrame, Callable[[list], list]], list[tuple]] | None = None,
+) -> DataFrame:
+    """The fetch scaffold every online family runs on: a
+    ``mapInPandas`` stage over the work-list's ``in_cols``. Per batch,
+    ``keys_fn(pdf, call_many)`` (default: the rows' ``in_cols``
+    tuples) gives the fetch keys, and may send a lookup round of its
+    own through ``call_many``; ``reqs_fn(*key)`` yields each key's
+    (method, params) requests; all of the batch's requests dispatch
+    through ONE ``_Pacer.call_many`` (bounded concurrency, JSON-RPC
+    batching, pacing, retry); and ``assemble_fn(*key, results)``
+    builds the key's raw-table rows from its result slice, in key
+    order. One work-list partition = one task. ``transport_factory``
+    is resolved on the EXECUTOR (it must be picklable); default is the
+    stdlib HTTP transport."""
+    cfg = config or RpcConfig()
+    factory = transport_factory or http_transport
+    cols = [f.name for f in schema.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        transport = factory(cfg)
+        pacer = _Pacer(cfg)
+
+        def call_many(reqs: list) -> list:
+            return pacer.call_many(transport, reqs)
+
+        for pdf in batches:
+            keys = (
+                keys_fn(pdf, call_many) if keys_fn
+                else list(pdf[in_cols].itertuples(index=False))
+            )
+            per_key = [reqs_fn(*k) for k in keys]
+            results = call_many([r for rs in per_key for r in rs])
+            rows: list[dict] = []
+            i = 0
+            for k, rs in zip(keys, per_key):
+                rows.extend(assemble_fn(*k, results[i:i + len(rs)]))
+                i += len(rs)
+            yield pd.DataFrame(rows, columns=cols)
+
+    return work_list.select(*in_cols).mapInPandas(run, schema)
+
+
 def fetch_blocks(
     spark: SparkSession,
     work_list: DataFrame,
@@ -305,29 +396,13 @@ def fetch_blocks(
     """Fetch block headers for every ``block_number`` in the work-list
     (one request per row, paced per executor). The result schema
     matches the replay raw table, so ``datasets.blocks.transform``
-    applies unchanged.
-
-    ``transport_factory`` is resolved on the EXECUTOR (it must be
-    picklable); default is the stdlib HTTP transport.
-    """
-    cfg = config or RpcConfig()
-    factory = transport_factory or http_transport
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = factory(cfg)
-        pacer = _Pacer(cfg)
-        for pdf in batches:
-            reqs = [
-                ("eth_getBlockByNumber", [hex(int(bn)), False])
-                for bn in pdf["block_number"]
-            ]
-            rows = [
-                flatten_block(raw, chain_id)
-                for raw in pacer.call_many(transport, reqs)
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in BLOCK_RAW_SCHEMA.fields])
-
-    return work_list.select("block_number").mapInPandas(run, BLOCK_RAW_SCHEMA)
+    applies unchanged."""
+    return _fetch_stage(
+        work_list, ["block_number"], BLOCK_RAW_SCHEMA,
+        lambda n: [("eth_getBlockByNumber", [hex(n), False])],
+        lambda n, results: [flatten_block(results[0], chain_id)],
+        config, transport_factory,
+    )
 
 
 LOG_RAW_SCHEMA = T.StructType(
@@ -381,44 +456,33 @@ def fetch_logs(
     predicates are pushed into the RPC filter object
     (rpc_params.rs:99-131), so filtering happens node-side exactly as
     the landed-table path pushes them into the parquet scan."""
-    cfg = config or RpcConfig()
-    factory = transport_factory or http_transport
     flt_base: dict = {}
     if address is not None:
         flt_base["address"] = "0x" + address.hex()
     if topic0 is not None:
         flt_base["topics"] = ["0x" + topic0.hex()]
+    size = (config or RpcConfig()).inner_request_size
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = factory(cfg)
-        pacer = _Pacer(cfg)
-        cols = [f.name for f in LOG_RAW_SCHEMA.fields]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nums = sorted(int(b) for b in pdf["block_number"])
-            rows: list[dict] = []
-            i = 0
-            while i < len(nums):
-                # longest contiguous run within inner_request_size
-                j = i
-                while (
-                    j + 1 < len(nums)
-                    and nums[j + 1] == nums[j] + 1
-                    and (j + 1 - i) < cfg.inner_request_size
-                ):
-                    j += 1
-                flt = {
-                    **flt_base,
-                    "fromBlock": hex(nums[i]),
-                    "toBlock": hex(nums[j]),
-                }
-                for raw in pacer.call(transport, "eth_getLogs", [flt]):
-                    rows.append(flatten_log(raw, chain_id))
-                i = j + 1
-            yield pd.DataFrame(rows, columns=cols)
+    def ranges(pdf: pd.DataFrame, _call_many) -> list[tuple[int, int]]:
+        """Longest contiguous runs of at most inner_request_size blocks."""
+        out: list[tuple[int, int]] = []
+        for n in sorted(int(b) for b in pdf["block_number"]):
+            if out and n == out[-1][1] + 1 and n - out[-1][0] < size:
+                out[-1] = (out[-1][0], n)
+            else:
+                out.append((n, n))
+        return out
 
-    return work_list.select("block_number").mapInPandas(run, LOG_RAW_SCHEMA)
+    def reqs(lo: int, hi: int) -> list[tuple[str, list]]:
+        return [("eth_getLogs", [{**flt_base, "fromBlock": hex(lo), "toBlock": hex(hi)}])]
+
+    def assemble(lo: int, hi: int, results: list) -> list[dict]:
+        return [flatten_log(raw, chain_id) for raw in results[0]]
+
+    return _fetch_stage(
+        work_list, ["block_number"], LOG_RAW_SCHEMA, reqs, assemble,
+        config, transport_factory, keys_fn=ranges,
+    )
 
 
 def fake_transport_factory(config: RpcConfig) -> Transport:
@@ -527,10 +591,13 @@ class FlakyTransportFactory:
     def __call__(self, config: RpcConfig) -> Transport:
         inner = fake_transport_factory(config)
         state = {"n": 0}
+        lock = threading.Lock()  # call_many dispatches concurrently
 
         def call(method: str, params: list) -> dict:
-            state["n"] += 1
-            if state["n"] <= self.fail_first:
+            with lock:
+                state["n"] += 1
+                n = state["n"]
+            if n <= self.fail_first:
                 raise ConnectionError("flaky")
             return inner(method, params)
 

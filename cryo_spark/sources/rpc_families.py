@@ -23,18 +23,19 @@ Mirrors the reference's typed fetch surface
 
 Every fetcher is the same Spark shape as ``rpc.fetch_logs``: a
 work-list DataFrame (one row per block, or per point-lookup tuple)
-feeds a ``mapInPandas`` stage whose tasks pace/retry through
-``rpc._Pacer``; landed rows match the replay raw-table schemas
-exactly (cryo_spark.fixtures), so every dataset transform applies
-unchanged online and offline. At cluster scale the work-list's
-partitioning IS the fetch parallelism — contiguous block ranges per
-task, no driver-side loop.
+feeds a ``mapInPandas`` stage (``rpc._fetch_stage``) whose tasks
+dispatch all their requests through one ``rpc._Pacer.call_many``
+(bounded concurrency, batching, pacing, retry); landed rows match
+the replay raw-table schemas exactly (cryo_spark.fixtures), so every
+dataset transform applies unchanged online and offline. At cluster
+scale the work-list's partitioning IS the fetch parallelism —
+contiguous block ranges per task, no driver-side loop — and
+``max_concurrent_requests`` is the request concurrency within a task.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -46,10 +47,9 @@ from cryo_spark.sources.rpc import (
     Transport,
     _hex_to_bytes,
     _hex_to_int,
-    _Pacer,
+    _fetch_stage,
     fake_transport_factory,
     flatten_log,
-    http_transport,
 )
 
 
@@ -347,32 +347,6 @@ def flatten_opcodes(trace: dict, block_number: int, txi: int, txh, chain_id: int
 # ---------------------------------------------------------------------------
 
 
-def _per_block_fetcher(
-    work_list: DataFrame,
-    schema: T.StructType,
-    handler,
-    config: RpcConfig | None,
-    transport_factory,
-):
-    """Shared mapInPandas scaffold: ``handler(pacer, transport, n)``
-    returns raw-table rows for block ``n``. One work-list partition =
-    one task; pacing/retry happens inside the task."""
-    cfg = config or RpcConfig()
-    factory = transport_factory or http_transport
-    cols = [f.name for f in schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = factory(cfg)
-        pacer = _Pacer(cfg)
-        for pdf in batches:
-            rows: list[dict] = []
-            for bn in pdf["block_number"]:
-                rows.extend(handler(pacer, transport, int(bn)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return work_list.select("block_number").mapInPandas(run, schema)
-
-
 def fetch_transactions(
     spark, work_list: DataFrame,
     config: RpcConfig | None = None, transport_factory=None,
@@ -382,15 +356,39 @@ def fetch_transactions(
     (sources.rs:345,368). Pass ``include_receipts=False`` when the
     selected schema needs no receipt column — halves the request
     count (transactions.rs:124-135)."""
-    def handler(pacer, transport, n):
-        block = pacer.call(transport, "eth_getBlockByNumber", [hex(n), True])
-        receipts = (
-            pacer.call(transport, "eth_getBlockReceipts", [hex(n)])
-            if include_receipts else None
-        )
-        return flatten_transactions(block, receipts, chain_id)
+    def reqs(n):
+        out = [("eth_getBlockByNumber", [hex(n), True])]
+        if include_receipts:
+            out.append(("eth_getBlockReceipts", [hex(n)]))
+        return out
 
-    return _per_block_fetcher(work_list, TX_RAW_SCHEMA, handler, config, transport_factory)
+    def assemble(n, results):
+        receipts = results[1] if include_receipts else None
+        return flatten_transactions(results[0], receipts, chain_id)
+
+    return _fetch_stage(
+        work_list, ["block_number"], TX_RAW_SCHEMA, reqs, assemble,
+        config, transport_factory,
+    )
+
+
+def _lookup_txs(call_many, hashes: list[str]) -> list[dict]:
+    """Batched eth_getTransactionByHash round for by-hash families
+    whose rows need the landed (block_number, transaction_index)
+    context; an unknown or pending hash fails loudly."""
+    txs = call_many([("eth_getTransactionByHash", [h]) for h in hashes])
+    for h, tx in zip(hashes, txs):
+        if tx is None:  # transactions.rs:170 "transaction not found"
+            raise ValueError(f"transaction not found: {h}")
+        if tx.get("blockNumber") is None:
+            # pending/mempool tx (transactions.rs:179 "no block number
+            # for tx") — never land a context-less row
+            raise ValueError(f"no block number for tx: {h}")
+    return txs
+
+
+def _hashes(pdf: pd.DataFrame) -> list[str]:
+    return ["0x" + bytes(h).hex() for h in pdf["transaction_hash"]]
 
 
 def fetch_transactions_by_hash(
@@ -414,57 +412,36 @@ def fetch_transactions_by_hash(
     TX_RAW_SCHEMA via the same flattener as the per-block path, so
     schema and gas-price semantics (receipt effectiveGasPrice first)
     are identical by construction."""
-    cfg = config or RpcConfig()
-    factory = transport_factory or http_transport
-    cols = [f.name for f in TX_RAW_SCHEMA.fields]
+    def keys(pdf, call_many):
+        hashes = _hashes(pdf)
+        txs = _lookup_txs(call_many, hashes)
+        bns = sorted({_hex_to_int(t["blockNumber"]) for t in txs})
+        headers = dict(zip(bns, call_many(
+            [("eth_getBlockByNumber", [hex(n), False]) for n in bns]
+        )))
+        return [
+            (h, tx, headers[_hex_to_int(tx["blockNumber"])])
+            for h, tx in zip(hashes, txs)
+        ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = factory(cfg)
-        pacer = _Pacer(cfg)
-        for pdf in batches:
-            hashes = ["0x" + bytes(h).hex() for h in pdf["transaction_hash"]]
-            if not hashes:
-                yield pd.DataFrame([], columns=cols)
-                continue
-            txs = pacer.call_many(
-                transport, [("eth_getTransactionByHash", [h]) for h in hashes]
-            )
-            for h, tx in zip(hashes, txs):
-                if tx is None:  # transactions.rs:170 "transaction not found"
-                    raise ValueError(f"transaction not found: {h}")
-                if tx.get("blockNumber") is None:
-                    # pending/mempool tx (transactions.rs:179
-                    # "no block number for tx") — never land a
-                    # context-less row
-                    raise ValueError(f"no block number for tx: {h}")
-            receipts = (
-                pacer.call_many(
-                    transport,
-                    [("eth_getTransactionReceipt", [h]) for h in hashes],
-                )
-                if include_receipts else None
-            )
-            for h, rc in zip(hashes, receipts or []):
-                if rc is None:
-                    # the tx was served mined above, so a null receipt
-                    # is provider lag / pruning — fail clearly, never
-                    # an AttributeError in the flattener
-                    raise ValueError(f"receipt not found for mined tx: {h}")
-            bns = sorted({_hex_to_int(t["blockNumber"]) for t in txs})
-            headers = pacer.call_many(
-                transport,
-                [("eth_getBlockByNumber", [hex(n), False]) for n in bns],
-            )
-            by_bn = dict(zip(bns, headers))
-            rows: list[dict] = []
-            for i, tx in enumerate(txs):
-                blk = dict(by_bn[_hex_to_int(tx["blockNumber"])])
-                blk["transactions"] = [tx]
-                rc = [receipts[i]] if receipts is not None else None
-                rows.extend(flatten_transactions(blk, rc, chain_id))
-            yield pd.DataFrame(rows, columns=cols)
+    def reqs(h, _tx, _header):
+        return [("eth_getTransactionReceipt", [h])] if include_receipts else []
 
-    return work_list.select("transaction_hash").mapInPandas(run, TX_RAW_SCHEMA)
+    def assemble(h, tx, header, results):
+        if include_receipts and results[0] is None:
+            # the tx was served mined above, so a null receipt is
+            # provider lag / pruning — fail clearly, never an
+            # AttributeError in the flattener
+            raise ValueError(f"receipt not found for mined tx: {h}")
+        return flatten_transactions(
+            {**header, "transactions": [tx]},
+            results if include_receipts else None, chain_id,
+        )
+
+    return _fetch_stage(
+        work_list, ["transaction_hash"], TX_RAW_SCHEMA, reqs, assemble,
+        config, transport_factory, keys_fn=keys,
+    )
 
 
 def _by_hash_fetcher(
@@ -481,45 +458,21 @@ def _by_hash_fetcher(
     ``transaction_hash``; ``reqs_fn(hash_hex)`` yields the family's
     requests and ``assemble_fn(hash_hex, tx, results)`` builds raw
     rows from its slice. ``need_tx`` prefixes a (batched)
-    eth_getTransactionByHash phase for families whose raw rows need
+    eth_getTransactionByHash round for families whose raw rows need
     the landed (block_number, transaction_index) context the per-tx
     RPC response omits. All requests ride ``call_many`` — by-hash
     extraction is point-lookup-heavy, so JSON-RPC batching is the
     round-trip win."""
-    cfg = config or RpcConfig()
-    factory = transport_factory or http_transport
-    cols = [f.name for f in schema.fields]
+    def keys(pdf, call_many):
+        hashes = _hashes(pdf)
+        txs = _lookup_txs(call_many, hashes) if need_tx else [None] * len(hashes)
+        return list(zip(hashes, txs))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = factory(cfg)
-        pacer = _Pacer(cfg)
-        for pdf in batches:
-            hashes = ["0x" + bytes(h).hex() for h in pdf["transaction_hash"]]
-            if not hashes:
-                yield pd.DataFrame([], columns=cols)
-                continue
-            txs: list = [None] * len(hashes)
-            if need_tx:
-                txs = pacer.call_many(
-                    transport,
-                    [("eth_getTransactionByHash", [h]) for h in hashes],
-                )
-                for h, t in zip(hashes, txs):
-                    if t is None:
-                        raise ValueError(f"transaction not found: {h}")
-                    if t.get("blockNumber") is None:
-                        raise ValueError(f"no block number for tx: {h}")
-            per = [reqs_fn(h) for h in hashes]
-            flat = [r for rs in per for r in rs]
-            results = pacer.call_many(transport, flat)
-            rows: list[dict] = []
-            i = 0
-            for h, tx, rs in zip(hashes, txs, per):
-                rows.extend(assemble_fn(h, tx, results[i:i + len(rs)]))
-                i += len(rs)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return work_list.select("transaction_hash").mapInPandas(run, schema)
+    return _fetch_stage(
+        work_list, ["transaction_hash"], schema,
+        lambda h, _tx: reqs_fn(h), assemble_fn, config, transport_factory,
+        keys_fn=keys,
+    )
 
 
 def fetch_logs_by_hash(
@@ -667,11 +620,12 @@ def fetch_traces(
     config: RpcConfig | None = None, transport_factory=None, chain_id: int = 1,
 ) -> DataFrame:
     """trace_block per block (sources.rs:377)."""
-    def handler(pacer, transport, n):
-        return [flatten_trace(t, chain_id)
-                for t in pacer.call(transport, "trace_block", [hex(n)])]
-
-    return _per_block_fetcher(work_list, TRACE_RAW_SCHEMA, handler, config, transport_factory)
+    return _fetch_stage(
+        work_list, ["block_number"], TRACE_RAW_SCHEMA,
+        lambda n: [("trace_block", [hex(n)])],
+        lambda n, results: [flatten_trace(t, chain_id) for t in results[0]],
+        config, transport_factory,
+    )
 
 
 def fetch_state_diffs(
@@ -680,16 +634,37 @@ def fetch_state_diffs(
 ) -> DataFrame:
     """trace_replayBlockTransactions(stateDiff) per block
     (sources.rs:247)."""
-    def handler(pacer, transport, n):
-        replays = pacer.call(
-            transport, "trace_replayBlockTransactions", [hex(n), ["stateDiff"]]
-        )
+    def assemble(n, results):
         rows: list[dict] = []
-        for txi, replay in enumerate(replays):
+        for txi, replay in enumerate(results[0]):
             rows.extend(flatten_state_diffs(replay, n, txi, chain_id))
         return rows
 
-    return _per_block_fetcher(work_list, STATE_DIFF_RAW_SCHEMA, handler, config, transport_factory)
+    return _fetch_stage(
+        work_list, ["block_number"], STATE_DIFF_RAW_SCHEMA,
+        lambda n: [("trace_replayBlockTransactions", [hex(n), ["stateDiff"]])],
+        assemble, config, transport_factory,
+    )
+
+
+def _debug_per_block(work_list, schema, tracer_opts, assemble_result,
+                     config, transport_factory):
+    """Shared debug_traceBlockByNumber shape (sources.rs:569-715): one
+    geth tracer call per block, ``assemble_result(result, block_number,
+    transaction_index, transaction_hash)`` per traced transaction."""
+    def assemble(n, results):
+        rows: list[dict] = []
+        for txi, entry in enumerate(results[0]):
+            rows.extend(assemble_result(
+                entry.get("result"), n, txi, _hex_to_bytes(entry.get("txHash")),
+            ))
+        return rows
+
+    return _fetch_stage(
+        work_list, ["block_number"], schema,
+        lambda n: [("debug_traceBlockByNumber", [hex(n), tracer_opts])],
+        assemble, config, transport_factory,
+    )
 
 
 def fetch_state_reads(
@@ -698,20 +673,11 @@ def fetch_state_reads(
 ) -> DataFrame:
     """debug_traceBlockByNumber(prestateTracer) per block
     (sources.rs:677)."""
-    def handler(pacer, transport, n):
-        traced = pacer.call(
-            transport, "debug_traceBlockByNumber",
-            [hex(n), {"tracer": "prestateTracer"}],
-        )
-        rows: list[dict] = []
-        for txi, entry in enumerate(traced):
-            rows.extend(flatten_state_reads(
-                entry.get("result"), n, txi,
-                _hex_to_bytes(entry.get("txHash")), chain_id,
-            ))
-        return rows
-
-    return _per_block_fetcher(work_list, STATE_READ_RAW_SCHEMA, handler, config, transport_factory)
+    return _debug_per_block(
+        work_list, STATE_READ_RAW_SCHEMA, {"tracer": "prestateTracer"},
+        lambda res, bn, txi, txh: flatten_state_reads(res, bn, txi, txh, chain_id),
+        config, transport_factory,
+    )
 
 
 def fetch_geth_calls(
@@ -720,20 +686,11 @@ def fetch_geth_calls(
 ) -> DataFrame:
     """debug_traceBlockByNumber(callTracer) per block
     (sources.rs:715) — call-frame trees flattened depth-first."""
-    def handler(pacer, transport, n):
-        traced = pacer.call(
-            transport, "debug_traceBlockByNumber",
-            [hex(n), {"tracer": "callTracer"}],
-        )
-        rows: list[dict] = []
-        for txi, entry in enumerate(traced):
-            rows.extend(flatten_call_frames(
-                entry.get("result") or {}, n, txi,
-                _hex_to_bytes(entry.get("txHash")), chain_id,
-            ))
-        return rows
-
-    return _per_block_fetcher(work_list, TRACE_RAW_SCHEMA, handler, config, transport_factory)
+    return _debug_per_block(
+        work_list, TRACE_RAW_SCHEMA, {"tracer": "callTracer"},
+        lambda res, bn, txi, txh: flatten_call_frames(res or {}, bn, txi, txh, chain_id),
+        config, transport_factory,
+    )
 
 
 def fetch_opcodes(
@@ -742,17 +699,11 @@ def fetch_opcodes(
 ) -> DataFrame:
     """debug_traceBlockByNumber(structLogs) per block
     (sources.rs:604)."""
-    def handler(pacer, transport, n):
-        traced = pacer.call(transport, "debug_traceBlockByNumber", [hex(n), {}])
-        rows: list[dict] = []
-        for txi, entry in enumerate(traced):
-            rows.extend(flatten_opcodes(
-                entry.get("result") or {}, n, txi,
-                _hex_to_bytes(entry.get("txHash")), chain_id,
-            ))
-        return rows
-
-    return _per_block_fetcher(work_list, OPCODE_RAW_SCHEMA, handler, config, transport_factory)
+    return _debug_per_block(
+        work_list, OPCODE_RAW_SCHEMA, {},
+        lambda res, bn, txi, txh: flatten_opcodes(res or {}, bn, txi, txh, chain_id),
+        config, transport_factory,
+    )
 
 
 def fetch_js_traces(
@@ -762,49 +713,16 @@ def fetch_js_traces(
     """debug_traceBlockByNumber({tracer: <user js>}) per block
     (sources.rs:569) — results passed through as JSON strings, the
     reference's javascript-tracer passthrough semantics."""
-    def handler(pacer, transport, n):
-        traced = pacer.call(
-            transport, "debug_traceBlockByNumber", [hex(n), {"tracer": tracer_js}]
-        )
-        return [{
-            "block_number": n, "transaction_index": txi,
-            "transaction_hash": _hex_to_bytes(entry.get("txHash")),
-            "output": json.dumps(entry.get("result"), sort_keys=True),
+    return _debug_per_block(
+        work_list, JS_TRACE_RAW_SCHEMA, {"tracer": tracer_js},
+        lambda res, bn, txi, txh: [{
+            "block_number": bn, "transaction_index": txi,
+            "transaction_hash": txh,
+            "output": json.dumps(res, sort_keys=True),
             "chain_id": chain_id,
-        } for txi, entry in enumerate(traced)]
-
-    return _per_block_fetcher(work_list, JS_TRACE_RAW_SCHEMA, handler, config, transport_factory)
-
-
-def _point_fetcher(
-    work_list, in_cols, schema, reqs_fn, assemble_fn, config, transport_factory
-):
-    """Point-lookup scaffold with JSON-RPC batching: ``reqs_fn(row)``
-    yields that row's (method, params) requests, all rows' requests
-    dispatch through ``_Pacer.call_many`` (one batch POST per
-    ``batch_size`` when the transport supports it — the big
-    round-trip win for N-row point extractions), and
-    ``assemble_fn(row, results)`` builds the raw-table row from its
-    result slice."""
-    cfg = config or RpcConfig()
-    factory = transport_factory or http_transport
-    cols = [f.name for f in schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = factory(cfg)
-        pacer = _Pacer(cfg)
-        for pdf in batches:
-            tuples = list(pdf[in_cols].itertuples(index=False))
-            per_row = [reqs_fn(*t) for t in tuples]
-            flat = [r for reqs in per_row for r in reqs]
-            results = pacer.call_many(transport, flat)
-            rows, i = [], 0
-            for t, reqs in zip(tuples, per_row):
-                rows.append(assemble_fn(*t, results=results[i:i + len(reqs)]))
-                i += len(reqs)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return work_list.select(*in_cols).mapInPandas(run, schema)
+        }],
+        config, transport_factory,
+    )
 
 
 def fetch_accounts(
@@ -825,13 +743,13 @@ def fetch_accounts(
 
     def assemble(bn, address, results):
         bal, nonce, code = results
-        return {
+        return [{
             "block_number": int(bn), "address": bytes(address),
             "balance": _u256_bytes(bal), "nonce": _hex_to_int(nonce),
             "code": _hex_to_bytes(code), "chain_id": chain_id,
-        }
+        }]
 
-    return _point_fetcher(
+    return _fetch_stage(
         work_list, ["block_number", "address"], ACCOUNT_RAW_SCHEMA,
         reqs, assemble, config, transport_factory,
     )
@@ -849,13 +767,13 @@ def fetch_storage(
         ])]
 
     def assemble(bn, address, slot, results):
-        return {
+        return [{
             "block_number": int(bn), "address": bytes(address),
             "slot": bytes(slot), "value": _u256_bytes(results[0]),
             "chain_id": chain_id,
-        }
+        }]
 
-    return _point_fetcher(
+    return _fetch_stage(
         work_list, ["block_number", "address", "slot"], STORAGE_RAW_SCHEMA,
         reqs, assemble, config, transport_factory,
     )
@@ -876,13 +794,13 @@ def fetch_calls(
         ])]
 
     def assemble(bn, contract, call_data, results):
-        return {
+        return [{
             "block_number": int(bn), "contract": bytes(contract),
             "call_data": bytes(call_data), "output": _hex_to_bytes(results[0]),
             "chain_id": chain_id,
-        }
+        }]
 
-    return _point_fetcher(
+    return _fetch_stage(
         work_list, ["block_number", "contract", "call_data"], CALL_RAW_SCHEMA,
         reqs, assemble, config, transport_factory,
     )
@@ -895,16 +813,16 @@ def fetch_trace_calls(
     """trace_call per (block_number, tx_to_address, tx_call_data)
     (sources.rs:405) — simulate a call at each block and land its
     trace tree, the trace_calls dataset's online path."""
-    cols = [f.name for f in TRACE_CALL_RAW_SCHEMA.fields]
-
-    def row_fn(pacer, transport, bn, to_addr, call_data):
-        res = pacer.call(transport, "trace_call", [
+    def reqs(bn, to_addr, call_data):
+        return [("trace_call", [
             {"to": "0x" + bytes(to_addr).hex(),
              "data": "0x" + bytes(call_data).hex()},
             ["trace"], hex(int(bn)),
-        ])
+        ])]
+
+    def assemble(bn, to_addr, call_data, results):
         rows = []
-        for t in res.get("trace") or []:
+        for t in results[0].get("trace") or []:
             flat = flatten_trace({**t, "blockNumber": int(bn)}, chain_id)
             flat.pop("block_hash", None)
             flat.pop("transaction_hash", None)
@@ -914,21 +832,10 @@ def fetch_trace_calls(
             rows.append(flat)
         return rows
 
-    cfg = config or RpcConfig()
-    factory = transport_factory or http_transport
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = factory(cfg)
-        pacer = _Pacer(cfg)
-        for pdf in batches:
-            rows: list[dict] = []
-            for tup in pdf[["block_number", "tx_to_address", "tx_call_data"]].itertuples(index=False):
-                rows.extend(row_fn(pacer, transport, *tup))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return work_list.select(
-        "block_number", "tx_to_address", "tx_call_data"
-    ).mapInPandas(run, TRACE_CALL_RAW_SCHEMA)
+    return _fetch_stage(
+        work_list, ["block_number", "tx_to_address", "tx_call_data"],
+        TRACE_CALL_RAW_SCHEMA, reqs, assemble, config, transport_factory,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -965,10 +872,12 @@ class StressFakeFactory:
         return dict(out)
 
     def __call__(self, config: RpcConfig) -> Transport:
+        import threading
         import time
 
         inner = full_fake_transport_factory(config)
         state = {"n": 0}
+        lock = threading.Lock()  # call_many dispatches concurrently
         path, latency, fail_every = self.log_path, self.latency_s, self.fail_every
 
         def log(kind: str, n: int) -> None:
@@ -976,10 +885,12 @@ class StressFakeFactory:
                 f.write(f"{kind} {n}\n")
 
         def gate(n_inner: int) -> None:
-            state["n"] += 1
+            with lock:
+                state["n"] += 1
+                n = state["n"]
             if latency:
                 time.sleep(latency)
-            if fail_every and state["n"] % fail_every == 0:
+            if fail_every and n % fail_every == 0:
                 log("429", 1)
                 raise ConnectionError("429 too many requests")
             log("post", 1)

@@ -694,6 +694,27 @@ def test_cli_label_and_parquet_knobs(spark, tmp_path, capsys):
     assert meta.num_row_groups > 1
 
 
+def test_cli_max_concurrent_chunks_reaches_freeze_pool(spark, tmp_path, capsys, monkeypatch):
+    """--max-concurrent-chunks sets the width of freeze's per-datatype
+    pool (default 4, capped by the datatype count)."""
+    import concurrent.futures
+
+    widths = []
+
+    class Recording(concurrent.futures.ThreadPoolExecutor):
+        def __init__(self, max_workers=None, *args, **kwargs):
+            widths.append(max_workers)
+            super().__init__(max_workers, *args, **kwargs)
+
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", Recording)
+    monkeypatch.delenv("ETH_RPC_URL", raising=False)
+    base = ["blocks", "transactions", "logs", "-b", "0:100", "--no-report"]
+    assert api.main(base + ["-o", str(tmp_path / "a"), "--max-concurrent-chunks", "2"]) == 0
+    assert api.main(base + ["-o", str(tmp_path / "b")]) == 0
+    capsys.readouterr()
+    assert widths == [2, 3]
+
+
 def test_freeze_reorg_buffer_resolves_tip_offline(spark, tmp_path):
     """reorg_buffer without an explicit `latest` resolves the tip from
     the landed blocks table instead of silently skipping the buffer

@@ -219,10 +219,9 @@ def test_cli_online_flag(spark, tmp_path, monkeypatch):
     """`--rpc` switches the CLI to live extraction (reference
     online-first behavior); the http transport is swapped for the
     fake node at the module seam the fetchers resolve at call time."""
-    from cryo_spark.sources import rpc, rpc_families
+    from cryo_spark.sources import rpc
 
     monkeypatch.setattr(rpc, "http_transport", FAKE)
-    monkeypatch.setattr(rpc_families, "http_transport", FAKE)
     rc = api.main([
         "blocks", "-b", "100:120", "-o", str(tmp_path),
         "--chunk-size", "10", "--rpc", "http://fake-node:8545",
@@ -242,10 +241,9 @@ def test_cli_online_txs_and_timestamps(spark, tmp_path, monkeypatch):
     """CLI parity for the round-5 online paths: `--rpc --txs` freezes
     by per-hash fetch; `--rpc --timestamps` resolves chunk boundaries
     against the live chain (no landed lake anywhere)."""
-    from cryo_spark.sources import rpc, rpc_families
+    from cryo_spark.sources import rpc
 
     monkeypatch.setattr(rpc, "http_transport", FAKE)
-    monkeypatch.setattr(rpc_families, "http_transport", FAKE)
     rc = api.main([
         "transactions", "--txs", _fake_hash(102, 0), _fake_hash(103, 1),
         "-o", str(tmp_path), "--rpc", "http://fake-node:8545",

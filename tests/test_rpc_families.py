@@ -366,6 +366,55 @@ def test_stress_factory_429_retries_land_exact_rows(spark, tmp_path):
     assert s["inner"] >= 1000  # failed batches re-dispatch whole
 
 
+@pytest.mark.parametrize("batch_size", [1, 7])
+def test_concurrent_dispatch_lands_same_rows_per_family(spark, tmp_path, batch_size):
+    """Every family on the fetch scaffold lands identical rows, in the
+    same order within each partition, whether a task sends its
+    requests one at a time (max_concurrent_requests=1) or keeps the
+    default number in flight — with and without JSON-RPC batching."""
+    from pyspark.sql import functions as F
+
+    from cryo_spark.sources.rpc import fetch_blocks, fetch_logs
+
+    wl = work_list_df(spark, plan.parse_block_inputs("10:60"))
+    point_wl = _point_wl(
+        spark, [(b, bytes([b % 5]) * 20, bytes([b])) for b in range(10, 40)],
+        "block_number int, tx_to_address binary, tx_call_data binary",
+    )
+    families = {
+        "blocks": lambda **kw: fetch_blocks(spark, wl, **kw),
+        "transactions": lambda **kw: fam.fetch_transactions(spark, wl, **kw),
+        "transactions_no_receipts": lambda **kw: fam.fetch_transactions(
+            spark, wl, include_receipts=False, **kw),
+        "logs": lambda **kw: fetch_logs(spark, wl, **kw),
+        "traces": lambda **kw: fam.fetch_traces(spark, wl, **kw),
+        "state_diffs": lambda **kw: fam.fetch_state_diffs(spark, wl, **kw),
+        "state_reads": lambda **kw: fam.fetch_state_reads(spark, wl, **kw),
+        "geth_calls": lambda **kw: fam.fetch_geth_calls(spark, wl, **kw),
+        "opcodes": lambda **kw: fam.fetch_opcodes(spark, wl, **kw),
+        "js_traces": lambda **kw: fam.fetch_js_traces(spark, wl, "{js:1}", **kw),
+        "trace_calls": lambda **kw: fam.fetch_trace_calls(spark, point_wl, **kw),
+    }
+    factory = fam.BatchCountingFakeFactory(str(tmp_path / "pin"))
+
+    def rows(fetch, width):
+        df = fetch(
+            config=RpcConfig(
+                batch_size=batch_size, max_concurrent_requests=width,
+                inner_request_size=5,  # several eth_getLogs ranges per task
+            ),
+            transport_factory=factory,
+        )
+        return [tuple(r) for r in df.select(F.spark_partition_id(), "*").collect()]
+
+    for name, fetch in families.items():
+        serial = rows(fetch, 1)
+        assert len({r[0] for r in serial}) > 1, f"{name}: one partition"
+        assert rows(fetch, RpcConfig().max_concurrent_requests) == serial, name
+    if batch_size > 1:
+        assert factory.counts()["batch"] > 0
+
+
 def test_point_lookup_batching_cuts_round_trips(spark, tmp_path):
     from cryo_spark.sources.rpc import RpcConfig
 

@@ -112,6 +112,105 @@ def test_pacer_batch_charges_per_inner_request(monkeypatch):
     assert single._next_ok == pytest.approx(0.1)
 
 
+def test_pacer_rate_limit_holds_under_concurrent_dispatch(monkeypatch):
+    """The token bucket reserves each slot under a lock: N requests at
+    requests_per_second=R through call_many with 8 in flight still
+    take at least (N-1)/R. With the clock frozen, every thread hits
+    the bucket at once; a lost update would leave it short of N/R."""
+    import sys
+    import time
+
+    import cryo_spark.sources.rpc as rpcmod
+
+    n, rps = 40, 400.0
+    reqs = [("eth_getBlockByNumber", [hex(i), False]) for i in range(n)]
+    pacer = _Pacer(RpcConfig(requests_per_second=rps, max_concurrent_requests=8))
+    t0 = time.monotonic()
+    assert pacer.call_many(lambda m, p: p[0], reqs) == [hex(i) for i in range(n)]
+    assert time.monotonic() - t0 >= (n - 1) / rps
+
+    n = 4000
+    reqs = [("eth_getBlockByNumber", [hex(i), False]) for i in range(n)]
+    monkeypatch.setattr(rpcmod.time, "sleep", lambda s: None)
+    monkeypatch.setattr(rpcmod.time, "monotonic", lambda: 0.0)
+    pacer = _Pacer(RpcConfig(requests_per_second=rps, max_concurrent_requests=16))
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        pacer.call_many(lambda m, p: p[0], reqs)
+    finally:
+        sys.setswitchinterval(old)
+    assert pacer._next_ok == pytest.approx(n / rps)
+
+
+def test_call_many_bounds_in_flight_and_keeps_order():
+    """call_many keeps up to max_concurrent_requests units in flight,
+    never more, and returns results in request order; width 1 is the
+    serial loop. Batch POSTs are the units when batch_size > 1."""
+    import threading
+    import time
+
+    def counting_transport():
+        state = {"now": 0, "peak": 0}
+        lock = threading.Lock()
+
+        def enter():
+            with lock:
+                state["now"] += 1
+                state["peak"] = max(state["peak"], state["now"])
+            time.sleep(0.005)
+            with lock:
+                state["now"] -= 1
+
+        def call(method, params):
+            enter()
+            return params[0]
+
+        def batch(reqs):
+            enter()
+            return [p[0] for _m, p in reqs]
+
+        call.batch = batch
+        return call, state
+
+    reqs = [("eth_getBlockByNumber", [hex(i), False]) for i in range(40)]
+    want = [hex(i) for i in range(40)]
+    for width, batch_size in [(8, 1), (1, 1), (3, 7)]:
+        transport, state = counting_transport()
+        pacer = _Pacer(RpcConfig(max_concurrent_requests=width, batch_size=batch_size))
+        assert pacer.call_many(transport, reqs) == want
+        if width == 1:
+            assert state["peak"] == 1
+        else:
+            assert 1 < state["peak"] <= width, (width, batch_size, state)
+    with pytest.raises(ValueError, match="max_concurrent_requests"):
+        RpcConfig(max_concurrent_requests=0)
+
+
+def test_call_many_fails_fast_and_leaks_no_threads():
+    """One request out of retries fails the whole call_many: the error
+    propagates, queued requests are cancelled (far fewer transport
+    calls than every request retried to exhaustion), and no pool
+    thread outlives the call."""
+    import threading
+
+    cfg = RpcConfig(max_retries=2, initial_backoff_s=0.001, max_concurrent_requests=16)
+    calls = {"n": 0}
+    lock = threading.Lock()
+
+    def always_fail(method, params):
+        with lock:
+            calls["n"] += 1
+        raise ConnectionError("down")
+
+    before = threading.active_count()
+    reqs = [("eth_getBlockByNumber", [hex(i), False]) for i in range(200)]
+    with pytest.raises(ConnectionError, match="down"):
+        _Pacer(cfg).call_many(always_fail, reqs)
+    assert calls["n"] < 200 * (cfg.max_retries + 1)
+    assert threading.active_count() == before
+
+
 def test_rpc_url_resolution(monkeypatch):
     # cli/parse/source.rs:72-108: arg > ETH_RPC_URL > error; bare
     # hosts get an http:// prefix
