@@ -9,7 +9,9 @@ This package re-expresses that surface Spark-first:
   (or a mapInPandas RPC fetch stage when online),
 - schema selection / u256 expansion / hex encoding are column
   expression generators,
-- partitioning/chunking is driver arithmetic + repartitionByRange,
+- partitioning/chunking is planner arithmetic: one work-list partition
+  per chunk, chunk ids placed by ``repartitionById`` when a write
+  must shuffle,
 - sinks are ``df.write`` with cryo-compatible file naming.
 
 Beyond reference parity it adds large-scale training-data pipeline

@@ -500,7 +500,12 @@ def freeze(
     """Freeze datasets to chunked files (see :func:`_freeze_impl`).
     ``source`` swaps the replay lake for a live OnlineSource, making
     this the reference's primary workflow — online extraction to
-    sorted chunk files — as two Spark stages per dataset. Freeze is a
+    sorted chunk files. When the source's work list holds each chunk
+    in one partition and the dataset plan does not shuffle, each
+    chunk's file is written by the task that fetched it (one Spark
+    stage, no exchange); otherwise the write shuffles rows to one
+    partition per chunk first (``summary["write_paths"]`` records
+    which path each dataset took). Freeze is a
     terminal action, so the source's persisted fetch frames are
     released afterwards (collect() keeps them — its result is lazy)."""
     from cryo_spark.sources import use_source
@@ -644,6 +649,14 @@ def _freeze_impl(
     )
     summary: dict = {"completed_paths": [], "skipped_paths": [], "errored_paths": []}
 
+    # write in place (no shuffle) only when the active OnlineSource's
+    # work list holds each chunk in one partition AND the dataset's
+    # plan keeps rows in their work-list partition; everything else
+    # (offline lake scans, by-hash work lists, Window/groupBy
+    # datasets, n_partitions that split chunks) takes the shuffle
+    src = _active_online_source()
+    chunk_local = src is not None and src.chunks_in_one_partition(chunks)
+
     def _freeze_one(datatype: str) -> dict:
         df = _base_frame(
             spark, datatype, chunks,
@@ -654,17 +667,15 @@ def _freeze_impl(
         )
         sort_cols = _resolve_sort(get_spec(datatype), sort, len(q.datatypes))
         write_chunks = [tx_chunk] if tx_chunk is not None else chunks
+        label_expr = labels = None
         if partition_by:
             label_expr, labels = _partition_labels(
                 df, get_spec(datatype), q.dims, partition_by
             )
-            return cio.write_chunked(
-                df, datatype, write_chunks, sink, sort=sort_cols is not None,
-                sort_cols=sort_cols, label_expr=label_expr, labels=labels,
-            )
         return cio.write_chunked(
             df, datatype, write_chunks, sink, sort=sort_cols is not None,
-            sort_cols=sort_cols,
+            sort_cols=sort_cols, label_expr=label_expr, labels=labels,
+            in_place=chunk_local and cio.keeps_work_list_partitions(df),
         )
 
     # datatypes freeze CONCURRENTLY (reference: chunks run under a
@@ -681,10 +692,12 @@ def _freeze_impl(
             results = list(ex.map(_freeze_one, q.datatypes))
     else:
         results = [_freeze_one(dt) for dt in q.datatypes]
-    for res in results:
+    summary["write_paths"] = {}
+    for dt, res in zip(q.datatypes, results):
         summary["completed_paths"] += res["completed_paths"]
         summary["skipped_paths"] += res["skipped_paths"]
         summary["n_rows"] = summary.get("n_rows", 0) + res.get("n_rows", 0)
+        summary["write_paths"][dt] = "in_place" if res["in_place"] else "shuffle"
     summary["n_completed"] = len(summary["completed_paths"])
     summary["n_skipped"] = len(summary["skipped_paths"])
     # chunk stats fold for the run summary (A2, chunk_ops.rs:83-103)

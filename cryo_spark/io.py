@@ -12,10 +12,17 @@ Mirrors reference semantics:
 - run report — types/reports.rs:51-80.
 
 Scale design: freeze() runs ONE Spark job for all chunks of a
-dataset — repartition by chunk id, sort within partitions by the
+dataset — tag rows with their chunk id, sort within partitions by the
 schema sort columns, write with partitionBy — then renames each
 committed part-file to its cryo filename driver-side. No per-chunk
-job launch, no collect of data.
+job launch, no collect of data. The write takes one of two paths:
+
+- in place: when every chunk's rows already sit in one partition (the
+  online work list runs one fetch task per chunk and the dataset plan
+  has no shuffle), each chunk's file is sorted and written by the task
+  that fetched it — no exchange at all;
+- shuffled: otherwise rows move to partition ``label index x chunks +
+  chunk index`` (``repartitionById``), one partition per output file.
 """
 
 from __future__ import annotations
@@ -23,6 +30,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import time
 from dataclasses import dataclass, field
 
@@ -230,10 +238,18 @@ def write_chunked(
     sort_cols: list[str] | None = None,
     label_expr: Column | None = None,
     labels: list[str] | None = None,
+    in_place: bool = False,
 ) -> dict:
-    """One job: filter to chunks, tag rows with chunk id, repartition
-    by it, sort within partitions, partitioned write, rename part
-    files to cryo names. Returns summary dict.
+    """One job: filter to chunks, tag rows with chunk id, sort within
+    partitions, partitioned write, rename part files to cryo names.
+    Returns a summary dict; its ``in_place`` says which path wrote.
+
+    ``in_place=True`` is the caller's promise that no chunk's rows span
+    two partitions of ``df`` (see :func:`keeps_work_list_partitions`):
+    the write then runs in the tasks that produced the rows, with no
+    shuffle. Otherwise rows are first moved to one partition per
+    (label, chunk) by :func:`place_by_chunk`. A broken promise shows up
+    as several part files for one chunk and raises.
 
     Object-store note: the final rename is a metadata move on a local
     or HDFS filesystem but a COPY on S3-style stores. Flat cryo-style
@@ -252,7 +268,10 @@ def write_chunked(
         raise ValueError("label_expr and labels must be passed together")
     todo, skipped = plan_chunk_paths(sink, datatype, chunks, labels)
     if not todo:
-        return {"completed_paths": [], "skipped_paths": skipped, "n_rows": 0}
+        return {
+            "completed_paths": [], "skipped_paths": skipped, "n_rows": 0,
+            "in_place": in_place,
+        }
     # a chunk is recomputed if ANY of its labels is missing; rows for
     # already-written (label, chunk) files land in staging and are
     # simply not renamed (skip-existing never overwrites)
@@ -273,9 +292,8 @@ def write_chunked(
     if label_expr is not None:
         out = out.withColumn(LABEL_COL, label_expr)
         part_cols = [LABEL_COL, CHUNK_COL]
-    out = out.repartition(
-        max(len(todo), 1), *[F.col(c) for c in part_cols]
-    )
+    if not in_place:
+        out = place_by_chunk(out, len(todo_chunks), labels)
     keys = sort_cols if sort_cols is not None else list(spec.sort)
     if sort and keys and all(c in df.columns for c in keys):
         out = out.sortWithinPartitions(*part_cols, *keys)
@@ -331,8 +349,8 @@ def write_chunked(
         elif len(parts) == 1:
             os.replace(parts[0], final_path)
         else:
-            # repartition produced one partition per chunk id, so >1
-            # part files per chunk should not happen; fail loudly
+            # both paths keep each chunk in one partition, so >1 part
+            # files per chunk should not happen; fail loudly
             raise RuntimeError(f"multiple part files for chunk {i}: {parts}")
         completed.append(final_path)
     _rmtree(staging)
@@ -341,7 +359,62 @@ def write_chunked(
         import pyarrow.parquet as pq
 
         n_rows = sum(pq.read_metadata(p).num_rows for p in completed)
-    return {"completed_paths": completed, "skipped_paths": skipped, "n_rows": n_rows}
+    return {
+        "completed_paths": completed, "skipped_paths": skipped, "n_rows": n_rows,
+        "in_place": in_place,
+    }
+
+
+def place_by_chunk(df: DataFrame, n_chunks: int, labels: list[str] | None = None) -> DataFrame:
+    """Shuffle ``df`` so chunk i lands in partition i, or, with
+    partition-by ``labels``, in partition ``label index x n_chunks +
+    chunk index``: one partition per output file, none shared. A
+    hash repartition would collide ids (2 chunks hashed into 1
+    partition, 8 into 5) and leave tasks idle. Labels outside
+    ``labels`` land in partitions picked modulo the count — still one
+    partition per (label, chunk), their files are never renamed."""
+    if labels is None:
+        return df.repartitionById(n_chunks, CHUNK_COL)
+    idx = F.array_position(F.array(*[F.lit(lbl) for lbl in labels]), F.col(LABEL_COL))
+    return df.repartitionById(
+        n_chunks * len(labels), (idx.cast("int") - 1) * n_chunks + F.col(CHUNK_COL)
+    )
+
+
+#: physical operators that move rows between partitions
+_SHUFFLING_NODES = {
+    "Exchange", "ShuffleQueryStage", "AQEShuffleRead", "Union", "CartesianProduct",
+}
+_BROADCAST_NODES = {"BroadcastExchange", "BroadcastQueryStage"}
+_NODE_NAME = re.compile(r"(?:\*\(\d+\) )?(\w+)")
+
+
+def keeps_work_list_partitions(df: DataFrame) -> bool:
+    """True when every row of ``df`` stays in the partition of the
+    ``spark.range`` work-list row it came from: walking the physical
+    plan (persisted frames included), no node shuffles or concatenates
+    partitions, and every leaf is a ``Range``. A broadcast side is
+    replicated to every task, so its subtree does not count. A file or
+    local-relation scan partitions by split, not by chunk, so it fails
+    the test."""
+    lines = df._jdf.queryExecution().executedPlan().treeString().splitlines()
+    depths = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    broadcast_depth = None
+    for i, (line, depth) in enumerate(zip(lines, depths)):
+        if broadcast_depth is not None and depth > broadcast_depth:
+            continue
+        broadcast_depth = None
+        m = _NODE_NAME.match(line[depth:])
+        name = m.group(1) if m else ""
+        if name in _BROADCAST_NODES:
+            broadcast_depth = depth
+            continue
+        if name in _SHUFFLING_NODES:
+            return False
+        leaf = i + 1 == len(lines) or depths[i + 1] <= depth
+        if leaf and name != "Range":
+            return False
+    return True
 
 
 def _rmtree(path: str) -> None:

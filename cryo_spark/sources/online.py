@@ -9,8 +9,11 @@ call — the same mechanism the reference uses to swap its fetch layer
 under every dataset (sources.rs Source is passed into each
 dataset's collect_by_block).
 
-Scale shape: the block work-list is partitioned by contiguous range
-(one fetch task per range); point-lookup families build the
+Scale shape: the block work-list has one partition per chunk (one
+fetch task per chunk, no shuffle), so ``api.freeze`` can sort and
+write each chunk's file in the task that fetched it; an
+``n_partitions`` larger than the chunk count splits chunks and sends
+the write back through a shuffle. Point-lookup families build the
 block x dim-value product work-list (reference C4 param-set
 expansion). Fetched frames are memoized per raw-table name and
 persisted, so MultiDatatype groups sharing a fetch (meta.rs:23-39)
@@ -97,8 +100,16 @@ class OnlineSource:
     def _block_wl(self, spark: SparkSession) -> DataFrame:
         if not self.chunks:
             raise ValueError("OnlineSource needs block chunks for this family")
-        n = self.n_partitions or max(len(self.chunks), 1)
-        return rpc.work_list_df(spark, self.chunks, n_partitions=n)
+        return rpc.work_list_df(spark, self.chunks, n_partitions=self.n_partitions)
+
+    def chunks_in_one_partition(self, chunks) -> bool:
+        """True when the block work list holds each of ``chunks`` whole
+        in one partition: the source fetches exactly these chunks and
+        ``n_partitions`` does not split any of them (see
+        :func:`rpc.work_list_df`)."""
+        return bool(chunks) and list(chunks) == list(self.chunks or []) and (
+            (self.n_partitions or 0) <= len(chunks)
+        )
 
     def _tx_wl(self, spark: SparkSession) -> DataFrame:
         """Per-hash work-list (CollectByTransaction): one row per

@@ -606,27 +606,39 @@ class FlakyTransportFactory:
 
 def work_list_df(spark: SparkSession, chunks, n_partitions: int | None = None) -> DataFrame:
     """Block work-list DataFrame from planner chunks: the fetch
-    stage's input, partitioned so each task holds a contiguous range
-    (one output file per chunk downstream)."""
+    stage's input, one ``block_number`` row per block.
+
+    One narrow plan, no shuffle: ``spark.range`` over chunk indexes,
+    one partition per chunk, exploded to block numbers through
+    ``sequence`` over literal bound arrays (``element_at`` over literal
+    lists for ``numbers`` chunks). Partition i holds chunk i's blocks
+    in ascending order, so one fetch task = one chunk and the chunked
+    write can run in that same task (``io.write_chunked`` in place).
+    The plan size does not grow with the chunk count: the bounds are
+    three array literals, not a union of one frame per chunk.
+
+    ``n_partitions`` overrides the partition count. Fewer partitions
+    than chunks keep whole chunks together (contiguous runs of chunk
+    indexes per partition); more partitions split chunks and cost a
+    ``repartitionByRange`` shuffle."""
     from pyspark.sql import functions as F
 
-    dfs = []
-    for c in chunks:
-        if c.numbers is not None:
-            dfs.append(
-                spark.createDataFrame(
-                    [(int(n),) for n in c.numbers], "block_number int"
-                )
-            )
-        else:
-            dfs.append(
-                spark.range(c.start, c.end + 1).select(
-                    F.col("id").cast("int").alias("block_number")
-                )
-            )
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    if n_partitions:
+    def arr(items) -> str:
+        return f"array({', '.join(map(str, items))})"
+
+    n = len(chunks)
+    i = "CAST(id AS INT) + 1"
+    blocks = (
+        f"sequence(element_at({arr(c.start if c.is_range else 0 for c in chunks)}, {i}), "
+        f"element_at({arr(c.end if c.is_range else 0 for c in chunks)}, {i}))"
+    )
+    if not all(c.is_range for c in chunks):
+        nums = arr("NULL" if c.is_range else arr(sorted(map(int, c.numbers))) for c in chunks)
+        blocks = f"coalesce(element_at({nums}, {i}), {blocks})"
+    parts = min(n_partitions or n, n)
+    out = spark.range(0, n, 1, parts).select(
+        F.explode(F.expr(blocks).cast("array<int>")).alias("block_number")
+    )
+    if n_partitions and n_partitions > n:
         out = out.repartitionByRange(n_partitions, "block_number")
     return out

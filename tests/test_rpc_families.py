@@ -376,7 +376,8 @@ def test_concurrent_dispatch_lands_same_rows_per_family(spark, tmp_path, batch_s
 
     from cryo_spark.sources.rpc import fetch_blocks, fetch_logs
 
-    wl = work_list_df(spark, plan.parse_block_inputs("10:60"))
+    # four chunks = four work-list partitions
+    wl = work_list_df(spark, plan.subchunk_by_size(plan.parse_block_inputs("10:60"), 13))
     point_wl = _point_wl(
         spark, [(b, bytes([b % 5]) * 20, bytes([b])) for b in range(10, 40)],
         "block_number int, tx_to_address binary, tx_call_data binary",

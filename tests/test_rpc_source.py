@@ -45,7 +45,9 @@ def test_fetch_blocks_retries_transient_failures(spark):
 def test_online_pipeline_fetch_to_chunked_files(spark, tmp_path):
     """Full online path: planner work-list -> mapInPandas fetch (fake
     node) -> chunk-aligned cryo-named files — the lifecycle the
-    reference runs per freeze (SURVEY §3.1), as two Spark stages."""
+    reference runs per freeze (SURVEY §3.1). The work list holds one
+    chunk per partition, so this is ONE Spark stage: each fetch task
+    sorts and writes its own chunk's file, with no shuffle."""
     import os
 
     from cryo_spark import io as cio
@@ -54,7 +56,9 @@ def test_online_pipeline_fetch_to_chunked_files(spark, tmp_path):
     wl = work_list_df(spark, chunks, n_partitions=4)
     fetched = fetch_blocks(spark, wl, transport_factory=fake_transport_factory)
     sink = cio.FileOutput(output_dir=str(tmp_path / "out"), prefix="fakenet")
-    res = cio.write_chunked(fetched, "blocks", chunks, sink)
+    assert cio.keeps_work_list_partitions(fetched)
+    res = cio.write_chunked(fetched, "blocks", chunks, sink, in_place=True)
+    assert res["in_place"]
     names = sorted(os.path.basename(p) for p in res["completed_paths"])
     assert names[0] == "fakenet__blocks__00000000_to_00000099.parquet"
     assert len(names) == 4 and res["n_rows"] == 400
@@ -324,3 +328,82 @@ def test_mesc_resolution(monkeypatch, tmp_path):
     monkeypatch.setenv("MESC_MODE", "PATH")
     monkeypatch.setenv("MESC_PATH", str(tmp_path / "missing.json"))
     assert resolve_rpc_url() == "http://fallback:8545"
+
+
+def _partitions(wl) -> list[list[int]]:
+    """Block numbers per partition, in partition and row order."""
+    from pyspark.sql import functions as F
+
+    rows = wl.select("block_number", F.spark_partition_id().alias("p")).collect()
+    out: list[list[int]] = [[] for _ in range(wl.rdd.getNumPartitions())]
+    for r in rows:
+        out[r.p].append(r.block_number)
+    return out
+
+
+def test_work_list_holds_one_chunk_per_partition(spark):
+    """Partition i holds exactly chunk i's blocks, ascending: uneven
+    range sizes (short last chunk) and explicit ``numbers`` chunks,
+    given in any order, alike."""
+    from cryo_spark.plan import BlockChunk
+
+    chunks = plan.subchunk_by_size(plan.parse_block_inputs("10:33"), 7) + [
+        BlockChunk(numbers=(90, 80, 85)),
+        BlockChunk(start=40, end=40),
+        BlockChunk(numbers=(5,)),
+    ]
+    assert _partitions(work_list_df(spark, chunks)) == [
+        sorted(c.values()) for c in chunks
+    ]
+
+
+def test_work_list_plan_is_narrow(spark):
+    """No Exchange and no Union: one ``Range`` leaf exploded to blocks,
+    which is what lets the chunked write run in the fetch task."""
+    from cryo_spark import io as cio
+
+    chunks = plan.subchunk_by_size(plan.parse_block_inputs("0:1000"), 100)
+    wl = work_list_df(spark, chunks)
+    text = wl._jdf.queryExecution().executedPlan().treeString()
+    assert "Exchange" not in text and "Union" not in text
+    assert cio.keeps_work_list_partitions(wl)
+    # the check itself: a union, a shuffle or a scan leaf (partitioned
+    # by split, not by chunk) fails it; a broadcast side does not count
+    assert not cio.keeps_work_list_partitions(wl.unionByName(wl))
+    assert not cio.keeps_work_list_partitions(wl.repartition(3))
+    from pyspark.sql import functions as F
+
+    small = spark.createDataFrame([(5,)], "block_number int")
+    assert not cio.keeps_work_list_partitions(small)
+    assert cio.keeps_work_list_partitions(wl.join(F.broadcast(small), "block_number"))
+
+
+def test_work_list_n_partitions_override(spark):
+    """Fewer partitions than chunks keep chunks whole and in order;
+    more partitions split them (a range shuffle); every block stays."""
+    chunks = plan.subchunk_by_size(plan.parse_block_inputs("0:60"), 10)
+    fewer = _partitions(work_list_df(spark, chunks, n_partitions=4))
+    assert len(fewer) == 4
+    assert [b for p in fewer for b in p] == list(range(60))
+    assert all(p and p[0] % 10 == 0 and len(p) % 10 == 0 for p in fewer)
+    more = work_list_df(spark, chunks, n_partitions=12)
+    assert more.rdd.getNumPartitions() == 12
+    assert sorted(b for p in _partitions(more) for b in p) == list(range(60))
+
+
+def test_work_list_builds_10k_chunks_in_bounded_time(spark):
+    """10,000 chunks are three array literals in one plan, not a
+    10,000-way union that Catalyst has to analyze."""
+    import time
+
+    from cryo_spark.plan import BlockChunk
+
+    chunks = [BlockChunk(start=3 * i, end=3 * i + 1) for i in range(10_000)]
+    chunks[-1] = BlockChunk(numbers=(40_000, 40_002))
+    t0 = time.perf_counter()
+    wl = work_list_df(spark, chunks)
+    text = wl._jdf.queryExecution().executedPlan().treeString()
+    assert time.perf_counter() - t0 < 30
+    assert "Union" not in text and "splits=10000" in text
+    # a limit reads partition 0 only: chunk 0, not 10,000 tasks
+    assert [r.block_number for r in wl.limit(2).collect()] == [0, 1]
