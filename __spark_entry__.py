@@ -1287,59 +1287,58 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for it before building the LSH/costball/batch frames — the
     # sample job now overlaps that construction chatter too; the
     # .result() moved just above train_centroids.
-    _pool = ThreadPoolExecutor(max_workers=2)
-    _fq = _pool.submit(
-        lambda: [
-            float(x)
-            for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
-        ]
-    )
-    _fs = _pool.submit(similarity.sample_matrix, emb)
-    query = _fq.result()
-    lsh = similarity.lsh_topk(emb, query, k=10, n_planes=6).withColumn(
-        "method", F.lit("lsh")
-    )
-    # round 13: cost-ball multi-probe tier (query-directed probing in
-    # its oracle-able form — margins, home signature and the probe
-    # threshold are all exact integers a self-contained DuckDB twin
-    # recomputes from the stored query row; see
-    # similarity.lsh_topk_costball)
-    mp = similarity.lsh_topk_costball(
-        emb, query, k=10, n_planes=6, n_probes=16
-    ).select(
-        "vec_id", F.col("cosine").alias("score"), F.lit("lsh_mp").alias("method")
-    )
-    # round 13: the BATCHED serving path, driver-checked — three query
-    # rows answered by ONE bucket join; each query's rows carry a
-    # method label 'batch_<qid>' and the oracle is the union of the
-    # per-query cost-ball twins (the batch join's per-query semantics
-    # are exactly lsh_topk_costball's, pinned by test AND here by hash)
-    bqids = [1, 5, 9]
-    bqueries = emb.filter(F.col("vec_id").isin(bqids)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    batch = similarity.lsh_topk_batch(
-        emb, bqueries, k=5, n_planes=6, n_probes=8, exclude_self=False,
-        dim=64,
-    ).select(
-        "vec_id",
-        F.col("cosine").alias("score"),
-        F.concat(F.lit("batch_"), F.col("query_id").cast("string")).alias(
-            "method"
-        ),
-    )
-    # round 6: the coarse quantizer is shared — centroids train once
-    # and the assignment frame feeds both IVF (raw-vector rescoring)
-    # and IVF-PQ (code encoding), the production one-index-many-tiers
-    # shape (previously each method retrained its own k-means).
-    # Round 8: the 4096-row training sample is also collected ONCE and
-    # fed to both trainers (they defined the identical TakeOrdered
-    # sample and each collected it — one redundant driver job); round
-    # 17 moved the collect into the thread pool above; round 18 defers
-    # the .result() to HERE so the sample job also overlaps the
-    # LSH/costball/batch frame construction above.
-    smp = _fs.result()
-    _pool.shutdown(wait=False)
+    with ThreadPoolExecutor(max_workers=2) as _pool:
+        _fq = _pool.submit(
+            lambda: [
+                float(x)
+                for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
+            ]
+        )
+        _fs = _pool.submit(similarity.sample_matrix, emb)
+        query = _fq.result()
+        lsh = similarity.lsh_topk(emb, query, k=10, n_planes=6).withColumn(
+            "method", F.lit("lsh")
+        )
+        # round 13: cost-ball multi-probe tier (query-directed probing in
+        # its oracle-able form — margins, home signature and the probe
+        # threshold are all exact integers a self-contained DuckDB twin
+        # recomputes from the stored query row; see
+        # similarity.lsh_topk_costball)
+        mp = similarity.lsh_topk_costball(
+            emb, query, k=10, n_planes=6, n_probes=16
+        ).select(
+            "vec_id", F.col("cosine").alias("score"), F.lit("lsh_mp").alias("method")
+        )
+        # round 13: the BATCHED serving path, driver-checked — three query
+        # rows answered by ONE bucket join; each query's rows carry a
+        # method label 'batch_<qid>' and the oracle is the union of the
+        # per-query cost-ball twins (the batch join's per-query semantics
+        # are exactly lsh_topk_costball's, pinned by test AND here by hash)
+        bqids = [1, 5, 9]
+        bqueries = emb.filter(F.col("vec_id").isin(bqids)).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        batch = similarity.lsh_topk_batch(
+            emb, bqueries, k=5, n_planes=6, n_probes=8, exclude_self=False,
+            dim=64,
+        ).select(
+            "vec_id",
+            F.col("cosine").alias("score"),
+            F.concat(F.lit("batch_"), F.col("query_id").cast("string")).alias(
+                "method"
+            ),
+        )
+        # round 6: the coarse quantizer is shared — centroids train once
+        # and the assignment frame feeds both IVF (raw-vector rescoring)
+        # and IVF-PQ (code encoding), the production one-index-many-tiers
+        # shape (previously each method retrained its own k-means).
+        # Round 8: the 4096-row training sample is also collected ONCE and
+        # fed to both trainers (they defined the identical TakeOrdered
+        # sample and each collected it — one redundant driver job); round
+        # 17 moved the collect into the thread pool above; round 18 defers
+        # the .result() to HERE so the sample job also overlaps the
+        # LSH/costball/batch frame construction above.
+        smp = _fs.result()
     cents = similarity.train_centroids(emb, n_centroids=16, sample_rows=smp)
     # spread() as the inline ivf_topk path did — a one-file parquet
     # would otherwise run the pandas-UDF GEMM single-threaded.

@@ -26,8 +26,7 @@ from cryo_spark.session import get_spark
 # (ADVICE r17: merely importing the package must not mutate py4j for
 # the whole process). External harnesses that own their SparkSession
 # and want the memo can call ``cryo_spark.install_py4j_memo()``
-# explicitly. Transport-only — no plan or result change;
-# SPARK_GRAFT_PY4J_MEMO=0 disables.
+# explicitly. Transport-only — no plan or result change.
 from cryo_spark.py4jopt import install as install_py4j_memo
 
 __version__ = "0.1.0"

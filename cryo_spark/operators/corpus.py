@@ -14,6 +14,7 @@ stream-filtered output.
 from __future__ import annotations
 
 import itertools
+import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -21,14 +22,11 @@ from pyspark.sql import functions as F
 from cryo_spark.operators import dedup, text
 from cryo_spark.operators.util import spread
 
+_log = logging.getLogger(__name__)
+
 #: process-wide Observation name sequence — Observation names must be
 #: unique per query, and a long-lived session runs many funnels
 _OBS_SEQ = itertools.count()
-
-#: experiment hook: when not None, replaces the priced default cut
-#: set inside `_corpus_stages` (see the _CUT comment there). Used by
-#: tools/ab_funnel_cuts.py; leave None in production.
-CUT_OVERRIDE: set | None = None
 
 
 def clean_corpus(
@@ -242,14 +240,6 @@ def _corpus_stages(
     _CUT = {"quality_lang_exact", "line_dedup", "span_dedup"}
     if dsir_target is not None and dsir_k:
         _CUT.add("redact")
-    if CUT_OVERRIDE is not None:
-        # experiment hook (round 15): tools/ab_funnel_cuts.py prices
-        # every cut subset against the persist-only spelling (the
-        # boundary stays persisted + observed either way; the override
-        # only toggles the lazy-localCheckpoint lineage cut, whose
-        # cost is plan-time execution of its segment and whose benefit
-        # is O(stages) driver planning)
-        _CUT = set(CUT_OVERRIDE)
     # every frame THIS run persists, so release_stage_storage can
     # unpersist surgically instead of clearing the whole session cache
     # (round 15, ADVICE-adjacent); attached to the last stage frame
@@ -269,9 +259,10 @@ def _corpus_stages(
     # is unchanged: cache-once semantics (BlockManager KeyLock) mean
     # the boundary still computes exactly once, the observe
     # accumulators live in the cached physical plan that every reader
-    # embeds, and any background failure is swallowed here and
-    # resurfaces on the main thread's own action. One worker: the
-    # segments are data-dependent, so deeper pools cannot help.
+    # embeds, and a background failure is logged here (not raised:
+    # the same segment resurfaces it on the main thread's own
+    # action). One worker: the segments are data-dependent, so deeper
+    # pools cannot help.
     _bg = None
     if checkpoint:
         from concurrent.futures import ThreadPoolExecutor
@@ -282,7 +273,8 @@ def _corpus_stages(
         try:
             frame.count()
         except Exception:  # noqa: BLE001 - main-thread action re-raises
-            pass
+            _log.warning("funnel: background stage materialization failed",
+                         exc_info=True)
 
     def _mark(name: str, frame: DataFrame, tc: str) -> DataFrame:
         # boundary hook: later stages and the funnel's aggregates both
@@ -341,355 +333,360 @@ def _corpus_stages(
         stages.append((name, frame, tc))
         return frame
 
-    df = _mark("input", df, text_col)
+    try:
+        df = _mark("input", df, text_col)
 
-    if (
-        url_blocklist or url_allowlist or domain_cap_n
-        or robots_rules is not None or host_ranks is not None
-    ) and url_col is None:
-        raise ValueError(
-            "url_blocklist/url_allowlist/domain_cap_n/robots_rules/"
-            "host_ranks require url_col"
-        )
-    if url_col is not None:
-        from cryo_spark.operators import web
-
-        # stage 0 (round 10): host-level controls run FIRST — cheaper
-        # than even canonical-url dedup (pure expression, no shuffle)
-        if url_blocklist:
-            df = _mark(
-                "url_blocklist",
-                web.url_host_filter(df, url_blocklist, "block", url_col),
-                text_col,
+        if (
+            url_blocklist or url_allowlist or domain_cap_n
+            or robots_rules is not None or host_ranks is not None
+        ) and url_col is None:
+            raise ValueError(
+                "url_blocklist/url_allowlist/domain_cap_n/robots_rules/"
+                "host_ranks require url_col"
             )
-        if url_allowlist:
-            df = _mark(
-                "url_allowlist",
-                web.url_host_filter(df, url_allowlist, "allow", url_col),
-                text_col,
-            )
-        if robots_rules is not None:
-            # robots compliance (round 10) right after the host lists:
-            # still pre-dedup (drop before paying any text processing),
-            # a broadcast join + regexp match per doc. PIPELINE-ONLY
-            # knob: the rules come from a DataFrame
-            # (operators.robots.robots_rules), so the SQL oracle chain
-            # has no mirror — contract entries run without it, and a
-            # funnel comparison against the SQL chain must too.
-            from cryo_spark.operators import robots as robots_mod
+        if url_col is not None:
+            from cryo_spark.operators import web
 
+            # stage 0 (round 10): host-level controls run FIRST — cheaper
+            # than even canonical-url dedup (pure expression, no shuffle)
+            if url_blocklist:
+                df = _mark(
+                    "url_blocklist",
+                    web.url_host_filter(df, url_blocklist, "block", url_col),
+                    text_col,
+                )
+            if url_allowlist:
+                df = _mark(
+                    "url_allowlist",
+                    web.url_host_filter(df, url_allowlist, "allow", url_col),
+                    text_col,
+                )
+            if robots_rules is not None:
+                # robots compliance (round 10) right after the host lists:
+                # still pre-dedup (drop before paying any text processing),
+                # a broadcast join + regexp match per doc. PIPELINE-ONLY
+                # knob: the rules come from a DataFrame
+                # (operators.robots.robots_rules), so the SQL oracle chain
+                # has no mirror — contract entries run without it, and a
+                # funnel comparison against the SQL chain must too.
+                from cryo_spark.operators import robots as robots_mod
+
+                df = _mark(
+                    "robots",
+                    robots_mod.apply_robots(
+                        df, robots_rules, url_col=url_col, drop=True
+                    ),
+                    text_col,
+                )
+            if host_ranks is not None:
+                # link-graph quality prior (round 10), last of the
+                # host-level policy controls: broadcast the #hosts-sized
+                # rank frame, keep docs whose host rank clears the floor.
+                # PIPELINE-ONLY like robots (the ranks come from a
+                # DataFrame — operators.linkgraph.host_rank); contract
+                # entries run without it. The signal column is dropped at
+                # the boundary so downstream stage schemas are unchanged.
+                from cryo_spark.operators import linkgraph
+
+                df = _mark(
+                    "host_rank",
+                    linkgraph.attach_host_rank(df, host_ranks, url_col=url_col)
+                    .filter(F.col("host_rank") >= min_host_rank)
+                    .drop("host_rank"),
+                    text_col,
+                )
+            ud = web.url_dedup(df, url_col=url_col)
             df = _mark(
-                "robots",
-                robots_mod.apply_robots(
-                    df, robots_rules, url_col=url_col, drop=True
+                "url_dedup",
+                df.join(
+                    ud.filter(~F.col("is_duplicate")).select("doc_id"), "doc_id"
                 ),
                 text_col,
             )
-        if host_ranks is not None:
-            # link-graph quality prior (round 10), last of the
-            # host-level policy controls: broadcast the #hosts-sized
-            # rank frame, keep docs whose host rank clears the floor.
-            # PIPELINE-ONLY like robots (the ranks come from a
-            # DataFrame — operators.linkgraph.host_rank); contract
-            # entries run without it. The signal column is dropped at
-            # the boundary so downstream stage schemas are unchanged.
-            from cryo_spark.operators import linkgraph
+            if domain_cap_n:
+                dc = web.domain_cap(df, domain_cap_n, url_col=url_col)
+                df = _mark(
+                    "domain_cap",
+                    df.join(dc.filter(F.col("kept")).select("doc_id"), "doc_id"),
+                    text_col,
+                )
 
-            df = _mark(
-                "host_rank",
-                linkgraph.attach_host_rank(df, host_ranks, url_col=url_col)
-                .filter(F.col("host_rank") >= min_host_rank)
-                .drop("host_rank"),
+        if langid_model is not None:
+            # LEARNED language ID (round 16): the char-n-gram multinomial
+            # model REPLACES the 4-language stopword vote as the stage-1
+            # language verdict — the production path for a target lang the
+            # vote doesn't know (e.g. 'ja'). with_language appends the
+            # prediction in the SAME narrow projection (broadcast
+            # coefficients, no shuffle), so the stage shape is unchanged.
+            # MLlib scoring is not SQL-expressible: a run with this knob
+            # has no DuckDB oracle (same contract carve-out as
+            # quality_model); the anchor is langid's held-out accuracy
+            # gate + the composition-equivalence test.
+            # langid_max_chars (round 17): the CCNet convention — score
+            # the first ~1,000 chars; language is stationary in-doc, so
+            # predictions for docs under the cap are identical (test-
+            # pinned) and the 100 TB scoring pass stops paying for 100 KB
+            # outlier docs (measured 2.7x at a 10 KB tail). None = score
+            # everything.
+            from cryo_spark.operators import langid as _langid
+
+            df = _langid.with_language(
+                df, langid_model, text_col, lang_out="_lid_lang",
+                prob_out="_lid_prob", max_chars=langid_max_chars,
+            )
+            lang_guess = F.col("_lid_lang")
+            if langid_min_prob:
+                # confidence floor: docs the classifier is unsure about
+                # (code-switching, boilerplate soup, too-short text) are
+                # treated as not-the-target-language rather than kept on
+                # a coin-flip argmax — the CCNet operating convention
+                lang_guess = F.when(
+                    F.col("_lid_prob") >= langid_min_prob, lang_guess
+                ).otherwise(F.lit("__low_confidence__"))
+        else:
+            if langid_min_prob:
+                raise ValueError(
+                    "langid_min_prob requires langid_model — the stopword "
+                    "vote emits no probability"
+                )
+            if lang not in text.STOPWORDS:
+                raise ValueError(
+                    f"lang={lang!r} is outside the stopword vote's "
+                    f"languages {sorted(text.STOPWORDS)} — the filter "
+                    "would silently drop EVERY document; pass "
+                    "langid_model= (a trained cryo_spark.operators."
+                    "langid model) for other languages"
+                )
+            lang_guess = text.lang_best_expr(text_col)["lang"]
+        feats = spread(df).select(
+            "doc_id",
+            F.col(text_col),
+            "source",
+            F.round(text.quality_score_expr(text_col), 6).alias("_q"),
+            lang_guess.alias("_lang"),
+            F.md5(dedup._norm_text(text_col)).alias("_ck"),
+        )
+        w = Window.partitionBy("_ck")
+        kept = (
+            feats.withColumn("_keeper", F.min("doc_id").over(w))
+            .filter(
+                (F.col("doc_id") == F.col("_keeper"))
+                & (F.col("_q") >= min_quality)
+                & (F.col("_lang") == lang)
+            )
+            .select("doc_id", text_col, "source")
+        )
+        kept = _mark("quality_lang_exact", kept, text_col)
+        if quality_model is not None:
+            # stage 1c (optional, round 8): LEARNED quality filter on the
+            # original text — scores are a narrow broadcast-coefficient
+            # pass (classifier.score_quality); the cutoff comes from
+            # classifier.train_calibrated_filter's held-out calibration.
+            # MLlib scoring is not SQL-expressible, so a pipeline run with
+            # this stage on has no DuckDB oracle — its correctness anchor
+            # is the composition-equivalence test (pipeline(model) ==
+            # pipeline() semi-joined to the surviving doc ids).
+            if quality_threshold is None:
+                raise ValueError("quality_model requires quality_threshold")
+            from cryo_spark.operators import classifier
+
+            ok = classifier.score_quality(kept, quality_model, text_col).filter(
+                F.col("quality_prob") >= quality_threshold
+            )
+            kept = _mark(
+                "learned_quality", kept.join(ok.select("doc_id"), "doc_id"),
                 text_col,
             )
-        ud = web.url_dedup(df, url_col=url_col)
-        df = _mark(
-            "url_dedup",
-            df.join(
-                ud.filter(~F.col("is_duplicate")).select("doc_id"), "doc_id"
-            ),
-            text_col,
-        )
-        if domain_cap_n:
-            dc = web.domain_cap(df, domain_cap_n, url_col=url_col)
-            df = _mark(
-                "domain_cap",
-                df.join(dc.filter(F.col("kept")).select("doc_id"), "doc_id"),
+        if lm_keep_frac is not None:
+            # stage 1d (optional, round 10): CCNet-shaped perplexity
+            # filter — the corpus's own bigram LM (text.ngram_lm_score)
+            # scores every surviving doc and the BOTTOM (1 - lm_keep_frac)
+            # by avg_logp (most atypical word transitions: garbage,
+            # boilerplate soup, residual wrong-language) is dropped. The
+            # cutoff is the corpus quantile via percentile_approx (one
+            # mergeable sketch aggregate — no sort, no single-partition
+            # collapse at any scale); docs too short to have a bigram have
+            # no score row and are KEPT (no evidence of atypicality;
+            # length floors belong to the quality stage), hence the
+            # drop-side left_anti rather than a keep-side semi join.
+            # PIPELINE-ONLY knob like robots/host_ranks: ln() and the
+            # approx quantile both sit outside the exact-hash oracle
+            # contract, so the SQL chain has no mirror — the correctness
+            # anchor is the composition-equivalence test (pipeline(lm) ==
+            # pipeline() semi-joined to the scored survivors) plus
+            # ngram_lm_score's own numpy differential.
+            if not (0.0 < lm_keep_frac <= 1.0):
+                raise ValueError("lm_keep_frac must be in (0, 1]")
+            scored = text.ngram_lm_score(kept, text_col, add_k=lm_add_k)
+            # two consumers (quantile + filter): persist dedups the bigram
+            # shuffles; released with the other boundary storage
+            scored.persist()
+            _persisted.append(scored)
+            thr = scored.agg(
+                F.percentile_approx(
+                    "avg_logp", F.lit(1.0 - lm_keep_frac), F.lit(10000)
+                ).alias("_thr")
+            )
+            drop = (
+                scored.crossJoin(F.broadcast(thr))
+                .filter(F.col("avg_logp") < F.col("_thr"))
+                .select("doc_id")
+            )
+            kept = _mark(
+                "lm_filter", kept.join(drop, "doc_id", "left_anti"), text_col
+            )
+        if line_dedup:
+            ld = spans.dedup_lines(
+                kept, text_col, min_docs=line_min_docs
+            ).filter(F.col("text") != "")
+            kept = _mark(
+                "line_dedup",
+                ld.select("doc_id", F.col("text").alias(text_col)).join(
+                    kept.select("doc_id", "source"), "doc_id"
+                ),
                 text_col,
             )
-
-    if langid_model is not None:
-        # LEARNED language ID (round 16): the char-n-gram multinomial
-        # model REPLACES the 4-language stopword vote as the stage-1
-        # language verdict — the production path for a target lang the
-        # vote doesn't know (e.g. 'ja'). with_language appends the
-        # prediction in the SAME narrow projection (broadcast
-        # coefficients, no shuffle), so the stage shape is unchanged.
-        # MLlib scoring is not SQL-expressible: a run with this knob
-        # has no DuckDB oracle (same contract carve-out as
-        # quality_model); the anchor is langid's held-out accuracy
-        # gate + the composition-equivalence test.
-        # langid_max_chars (round 17): the CCNet convention — score
-        # the first ~1,000 chars; language is stationary in-doc, so
-        # predictions for docs under the cap are identical (test-
-        # pinned) and the 100 TB scoring pass stops paying for 100 KB
-        # outlier docs (measured 2.7x at a 10 KB tail). None = score
-        # everything.
-        from cryo_spark.operators import langid as _langid
-
-        df = _langid.with_language(
-            df, langid_model, text_col, lang_out="_lid_lang",
-            prob_out="_lid_prob", max_chars=langid_max_chars,
-        )
-        lang_guess = F.col("_lid_lang")
-        if langid_min_prob:
-            # confidence floor: docs the classifier is unsure about
-            # (code-switching, boilerplate soup, too-short text) are
-            # treated as not-the-target-language rather than kept on
-            # a coin-flip argmax — the CCNet operating convention
-            lang_guess = F.when(
-                F.col("_lid_prob") >= langid_min_prob, lang_guess
-            ).otherwise(F.lit("__low_confidence__"))
-    else:
-        if langid_min_prob:
-            raise ValueError(
-                "langid_min_prob requires langid_model — the stopword "
-                "vote emits no probability"
-            )
-        if lang not in text.STOPWORDS:
-            raise ValueError(
-                f"lang={lang!r} is outside the stopword vote's "
-                f"languages {sorted(text.STOPWORDS)} — the filter "
-                "would silently drop EVERY document; pass "
-                "langid_model= (a trained cryo_spark.operators."
-                "langid model) for other languages"
-            )
-        lang_guess = text.lang_best_expr(text_col)["lang"]
-    feats = spread(df).select(
-        "doc_id",
-        F.col(text_col),
-        "source",
-        F.round(text.quality_score_expr(text_col), 6).alias("_q"),
-        lang_guess.alias("_lang"),
-        F.md5(dedup._norm_text(text_col)).alias("_ck"),
-    )
-    w = Window.partitionBy("_ck")
-    kept = (
-        feats.withColumn("_keeper", F.min("doc_id").over(w))
-        .filter(
-            (F.col("doc_id") == F.col("_keeper"))
-            & (F.col("_q") >= min_quality)
-            & (F.col("_lang") == lang)
-        )
-        .select("doc_id", text_col, "source")
-    )
-    kept = _mark("quality_lang_exact", kept, text_col)
-    if quality_model is not None:
-        # stage 1c (optional, round 8): LEARNED quality filter on the
-        # original text — scores are a narrow broadcast-coefficient
-        # pass (classifier.score_quality); the cutoff comes from
-        # classifier.train_calibrated_filter's held-out calibration.
-        # MLlib scoring is not SQL-expressible, so a pipeline run with
-        # this stage on has no DuckDB oracle — its correctness anchor
-        # is the composition-equivalence test (pipeline(model) ==
-        # pipeline() semi-joined to the surviving doc ids).
-        if quality_threshold is None:
-            raise ValueError("quality_model requires quality_threshold")
-        from cryo_spark.operators import classifier
-
-        ok = classifier.score_quality(kept, quality_model, text_col).filter(
-            F.col("quality_prob") >= quality_threshold
-        )
-        kept = _mark(
-            "learned_quality", kept.join(ok.select("doc_id"), "doc_id"),
-            text_col,
-        )
-    if lm_keep_frac is not None:
-        # stage 1d (optional, round 10): CCNet-shaped perplexity
-        # filter — the corpus's own bigram LM (text.ngram_lm_score)
-        # scores every surviving doc and the BOTTOM (1 - lm_keep_frac)
-        # by avg_logp (most atypical word transitions: garbage,
-        # boilerplate soup, residual wrong-language) is dropped. The
-        # cutoff is the corpus quantile via percentile_approx (one
-        # mergeable sketch aggregate — no sort, no single-partition
-        # collapse at any scale); docs too short to have a bigram have
-        # no score row and are KEPT (no evidence of atypicality;
-        # length floors belong to the quality stage), hence the
-        # drop-side left_anti rather than a keep-side semi join.
-        # PIPELINE-ONLY knob like robots/host_ranks: ln() and the
-        # approx quantile both sit outside the exact-hash oracle
-        # contract, so the SQL chain has no mirror — the correctness
-        # anchor is the composition-equivalence test (pipeline(lm) ==
-        # pipeline() semi-joined to the scored survivors) plus
-        # ngram_lm_score's own numpy differential.
-        if not (0.0 < lm_keep_frac <= 1.0):
-            raise ValueError("lm_keep_frac must be in (0, 1]")
-        scored = text.ngram_lm_score(kept, text_col, add_k=lm_add_k)
-        # two consumers (quantile + filter): persist dedups the bigram
-        # shuffles; released with the other boundary storage
-        scored.persist()
-        _persisted.append(scored)
-        thr = scored.agg(
-            F.percentile_approx(
-                "avg_logp", F.lit(1.0 - lm_keep_frac), F.lit(10000)
-            ).alias("_thr")
-        )
-        drop = (
-            scored.crossJoin(F.broadcast(thr))
-            .filter(F.col("avg_logp") < F.col("_thr"))
-            .select("doc_id")
-        )
-        kept = _mark(
-            "lm_filter", kept.join(drop, "doc_id", "left_anti"), text_col
-        )
-    if line_dedup:
-        ld = spans.dedup_lines(
-            kept, text_col, min_docs=line_min_docs
-        ).filter(F.col("text") != "")
-        kept = _mark(
-            "line_dedup",
-            ld.select("doc_id", F.col("text").alias(text_col)).join(
-                kept.select("doc_id", "source"), "doc_id"
-            ),
-            text_col,
-        )
-    sd = _mark(
-        "span_dedup",
-        spans.dedup_spans(kept, text_col, span_words)
-        .filter(F.col("text") != "")
-        .join(kept.select("doc_id", "source"), "doc_id"),
-        "text",
-    )
-    if near_dup:
-        pairs = dedup.ngram_jaccard_all_pairs(
-            sd, min_jaccard=min_jaccard
-        ).select("id_a", "id_b")
-        verdict = dedup.dedup_by_components(sd, pairs)
         sd = _mark(
-            "near_dup",
-            sd.join(
-                verdict.filter(~F.col("is_duplicate")).select("doc_id"),
+            "span_dedup",
+            spans.dedup_spans(kept, text_col, span_words)
+            .filter(F.col("text") != "")
+            .join(kept.select("doc_id", "source"), "doc_id"),
+            "text",
+        )
+        if near_dup:
+            pairs = dedup.ngram_jaccard_all_pairs(
+                sd, min_jaccard=min_jaccard
+            ).select("id_a", "id_b")
+            verdict = dedup.dedup_by_components(sd, pairs)
+            sd = _mark(
+                "near_dup",
+                sd.join(
+                    verdict.filter(~F.col("is_duplicate")).select("doc_id"),
+                    "doc_id",
+                ),
+                "text",
+            )
+        if semantic_dedup or semantic_dedup_index is not None:
+            # stage 2c (optional, round 14): SEMANTIC near-dup collapse on
+            # the span-deduped text — the corpus's own signed-feature-hash
+            # embeddings (textembed, engine-neutral) through graph_dedup
+            # (kNN graph -> threshold -> components -> min-id keepers).
+            # Catches paraphrase/reorder duplicates the n-gram Jaccard
+            # stage misses. Oracle-exact end to end (graph_dedup_sql), so
+            # funnel comparisons with the option ON still hash-match. The
+            # embedding frame is persisted: featurize per row, never per
+            # kNN candidate.
+            from cryo_spark.operators import similarity as sim_mod
+            from cryo_spark.operators import textembed as te_mod
+
+            if semantic_dedup_index is not None:
+                # round 15: serve stage 2c from a persisted
+                # save_embedding_index table instead of re-featurizing/
+                # re-signing the corpus in memory — graph_dedup_from_index
+                # reads the bucketed base in place. CONTRACT: the index
+                # must cover this stage's input (built from a previous
+                # identical run, or maintained by the delta path); ids the
+                # index has that the stage input lacks only ever WIDEN
+                # clusters (their keepers are already-shipped docs), ids
+                # the index lacks keep themselves (anti-join below), and
+                # when index == stage input the verdict is EQUAL to the
+                # in-memory spelling (pinned in tests). No SQL twin — the
+                # oracle cannot read Spark tables; contract entries use
+                # the in-memory path.
+                sem_verdict = sim_mod.graph_dedup_from_index(
+                    df.sparkSession, semantic_dedup_index,
+                    threshold=semantic_threshold, k=semantic_k,
+                    id_col="doc_id", n_probes=semantic_probes,
+                )
+                sd = _mark(
+                    "semantic_dedup",
+                    sd.join(
+                        sem_verdict.filter(F.col("is_duplicate"))
+                        .select("doc_id"),
+                        "doc_id",
+                        "left_anti",
+                    ),
+                    "text",
+                )
+            else:
+                temb = te_mod.text_embeddings(
+                    sd, text_col="text", id_col="doc_id", dim=semantic_dim
+                )
+                temb.persist()
+                _persisted.append(temb)
+                sem_verdict = sim_mod.graph_dedup(
+                    temb, threshold=semantic_threshold, k=semantic_k,
+                    id_col="doc_id", n_planes=semantic_planes,
+                    n_probes=semantic_probes,
+                )
+                sd = _mark(
+                    "semantic_dedup",
+                    sd.join(
+                        sem_verdict.filter(~F.col("is_duplicate"))
+                        .select("doc_id"),
+                        "doc_id",
+                    ),
+                    "text",
+                )
+        # redaction applied IN the same projection (redact_text_expr), not
+        # as a joined redact_pii frame — a join would make Catalyst
+        # evaluate the whole span-dedup subtree twice
+        out = _mark(
+            "redact",
+            sd.select(
                 "doc_id",
+                text.redact_text_expr("text").alias("text"),
+                "source", "n_spans", "n_kept",
             ),
             "text",
         )
-    if semantic_dedup or semantic_dedup_index is not None:
-        # stage 2c (optional, round 14): SEMANTIC near-dup collapse on
-        # the span-deduped text — the corpus's own signed-feature-hash
-        # embeddings (textembed, engine-neutral) through graph_dedup
-        # (kNN graph -> threshold -> components -> min-id keepers).
-        # Catches paraphrase/reorder duplicates the n-gram Jaccard
-        # stage misses. Oracle-exact end to end (graph_dedup_sql), so
-        # funnel comparisons with the option ON still hash-match. The
-        # embedding frame is persisted: featurize per row, never per
-        # kNN candidate.
-        from cryo_spark.operators import similarity as sim_mod
-        from cryo_spark.operators import textembed as te_mod
+        if dsir_target is not None and dsir_k:
+            # stage 3b (optional): DSIR importance resampling toward a
+            # target corpus — runs on the REDACTED text so placeholder
+            # tokens cannot differ between engines; Gumbel-top-k keyed on
+            # the pipeline seed (oracle-exact like every other stage)
+            from cryo_spark.operators import dsir as dsir_mod
 
-        if semantic_dedup_index is not None:
-            # round 15: serve stage 2c from a persisted
-            # save_embedding_index table instead of re-featurizing/
-            # re-signing the corpus in memory — graph_dedup_from_index
-            # reads the bucketed base in place. CONTRACT: the index
-            # must cover this stage's input (built from a previous
-            # identical run, or maintained by the delta path); ids the
-            # index has that the stage input lacks only ever WIDEN
-            # clusters (their keepers are already-shipped docs), ids
-            # the index lacks keep themselves (anti-join below), and
-            # when index == stage input the verdict is EQUAL to the
-            # in-memory spelling (pinned in tests). No SQL twin — the
-            # oracle cannot read Spark tables; contract entries use
-            # the in-memory path.
-            sem_verdict = sim_mod.graph_dedup_from_index(
-                df.sparkSession, semantic_dedup_index,
-                threshold=semantic_threshold, k=semantic_k,
-                id_col="doc_id", n_probes=semantic_probes,
+            sel = dsir_mod.dsir_select(
+                out, dsir_target, k=dsir_k, gumbel_seed=f"{seed}-dsir"
             )
-            sd = _mark(
-                "semantic_dedup",
-                sd.join(
-                    sem_verdict.filter(F.col("is_duplicate"))
-                    .select("doc_id"),
-                    "doc_id",
-                    "left_anti",
-                ),
-                "text",
-            )
-        else:
-            temb = te_mod.text_embeddings(
-                sd, text_col="text", id_col="doc_id", dim=semantic_dim
-            )
-            temb.persist()
-            _persisted.append(temb)
-            sem_verdict = sim_mod.graph_dedup(
-                temb, threshold=semantic_threshold, k=semantic_k,
-                id_col="doc_id", n_planes=semantic_planes,
-                n_probes=semantic_probes,
-            )
-            sd = _mark(
-                "semantic_dedup",
-                sd.join(
-                    sem_verdict.filter(~F.col("is_duplicate"))
-                    .select("doc_id"),
-                    "doc_id",
-                ),
-                "text",
-            )
-    # redaction applied IN the same projection (redact_text_expr), not
-    # as a joined redact_pii frame — a join would make Catalyst
-    # evaluate the whole span-dedup subtree twice
-    out = _mark(
-        "redact",
-        sd.select(
-            "doc_id",
-            text.redact_text_expr("text").alias("text"),
-            "source", "n_spans", "n_kept",
-        ),
-        "text",
-    )
-    if dsir_target is not None and dsir_k:
-        # stage 3b (optional): DSIR importance resampling toward a
-        # target corpus — runs on the REDACTED text so placeholder
-        # tokens cannot differ between engines; Gumbel-top-k keyed on
-        # the pipeline seed (oracle-exact like every other stage)
-        from cryo_spark.operators import dsir as dsir_mod
-
-        sel = dsir_mod.dsir_select(
-            out, dsir_target, k=dsir_k, gumbel_seed=f"{seed}-dsir"
-        )
-        out = _mark("dsir", out.join(sel.select("doc_id"), "doc_id"), "text")
-    if budget is not None:
-        if max_epochs:
-            # data-constrained variant (round 10): small sources whose
-            # temperature quota exceeds their size get REPEATED (up to
-            # max_epochs copies, `epoch` column surfaced) instead of
-            # silently capped. Downstream split assignment hashes
-            # doc_id, so every copy of a doc lands in the SAME split —
-            # repetition can never leak a doc across splits.
-            out = _mark(
-                "epoch_mix",
-                sampling.epoch_mix(
-                    out, budget, alpha, max_epochs,
-                    strata_col="source", seed=f"{seed}-mix",
-                ),
-                "text",
-            )
-        else:
-            out = _mark(
-                "temperature_mix",
-                sampling.temperature_mix(
-                    out, budget, alpha, strata_col="source",
-                    seed=f"{seed}-mix",
-                ),
-                "text",
-            )
-    _mark("split", sampling.split_assign(out, seed=f"{seed}-split"), "text")
-    if stages:
-        # ride the tracked-persist list on the final frame so
-        # release_stage_storage(final) can unpersist exactly this
-        # run's boundaries (plain Python attribute; harmless baggage)
-        stages[-1][1]._cryo_persisted = _persisted
-    return stages
+            out = _mark("dsir", out.join(sel.select("doc_id"), "doc_id"), "text")
+        if budget is not None:
+            if max_epochs:
+                # data-constrained variant (round 10): small sources whose
+                # temperature quota exceeds their size get REPEATED (up to
+                # max_epochs copies, `epoch` column surfaced) instead of
+                # silently capped. Downstream split assignment hashes
+                # doc_id, so every copy of a doc lands in the SAME split —
+                # repetition can never leak a doc across splits.
+                out = _mark(
+                    "epoch_mix",
+                    sampling.epoch_mix(
+                        out, budget, alpha, max_epochs,
+                        strata_col="source", seed=f"{seed}-mix",
+                    ),
+                    "text",
+                )
+            else:
+                out = _mark(
+                    "temperature_mix",
+                    sampling.temperature_mix(
+                        out, budget, alpha, strata_col="source",
+                        seed=f"{seed}-mix",
+                    ),
+                    "text",
+                )
+        _mark("split", sampling.split_assign(out, seed=f"{seed}-split"), "text")
+        if stages:
+            # ride the tracked-persist list on the final frame so
+            # release_stage_storage(final) can unpersist exactly this
+            # run's boundaries (plain Python attribute; harmless baggage)
+            stages[-1][1]._cryo_persisted = _persisted
+        return stages
+    finally:
+        if _bg is not None:
+            # queued counts still run; the worker exits after them
+            _bg.shutdown(wait=False)
 
 
 def prepare_training_corpus(df: DataFrame, **kwargs) -> DataFrame:

@@ -48,12 +48,9 @@ extended it to statics and view lookups.
 Transport-only: no Catalyst tree, plan, or result changes. Scale
 note: plans are built on one driver regardless of cluster size, so
 this is driver-latency relief at ANY scale, not a local[32] tuning.
-Kill-switch: ``SPARK_GRAFT_PY4J_MEMO=0``.
 """
 
 from __future__ import annotations
-
-import os
 
 from py4j.java_gateway import JavaClass, JavaMember, JavaPackage, JVMView
 
@@ -81,7 +78,7 @@ def _memoizing(orig, cacheable):
 def install() -> None:
     """Idempotently patch the three reflection lookups (module-wide)."""
     global _installed
-    if _installed or os.environ.get("SPARK_GRAFT_PY4J_MEMO", "1") == "0":
+    if _installed:
         return
     # JavaClass results only: a JavaPackage answer is py4j's
     # speculative "not resolvable as a class YET" — caching it would

@@ -15,11 +15,10 @@ It is plan reuse, not result caching: nothing is persisted, every
 action still computes from the parquet files, and Spark already
 snapshots a file listing per DataFrame handle anyway (an
 InMemoryFileIndex), so sharing the handle shares exactly that
-snapshot. The key includes the path's mtime so a rewritten fixture
-(tests regenerate into the same directory) gets a fresh read.
-
-Kill-switch: ``SPARK_GRAFT_READ_MEMO=0`` restores a bare
-``spark.read.parquet`` per call.
+snapshot. The memo holds ONE entry per path: a rewritten path
+(tests regenerate fixtures into the same directory) or a new Spark
+application replaces that entry with a fresh read, so a long-lived
+process holds at most one frame per distinct path it has read.
 """
 
 from __future__ import annotations
@@ -28,7 +27,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-_MEMO: dict[tuple[str, str, int], DataFrame] = {}
+#: abspath -> (applicationId, newest mtime_ns, frame)
+_MEMO: dict[str, tuple[str, int, DataFrame]] = {}
 
 
 def _newest_mtime_ns(path: str) -> int | None:
@@ -40,10 +40,8 @@ def _newest_mtime_ns(path: str) -> int | None:
     directory's mtime — a long-running application could have served
     a stale listing. The recursive max is the same freshness contract
     a bare ``spark.read.parquet`` gives (it re-lists on every call).
-    Cost: one os.walk per read call — trivial at local fixture size;
-    deployments pointing this at object-store paths with huge file
-    counts should prefer the kill-switch (the memo exists to absorb
-    REPEATED reads in one application, which such jobs rarely do)."""
+    Cost: one os.walk per read call — trivial at local fixture size,
+    but O(files) stat calls on paths with huge file counts."""
     try:
         st = os.stat(path)
     except OSError:
@@ -68,14 +66,14 @@ def _newest_mtime_ns(path: str) -> int | None:
 
 
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_READ_MEMO", "1") == "0":
-        return spark.read.parquet(path)
     mtime = _newest_mtime_ns(path)
     if mtime is None:
         # missing path: let Spark raise its usual AnalysisException
         return spark.read.parquet(path)
-    key = (spark.sparkContext.applicationId, os.path.abspath(path), mtime)
-    df = _MEMO.get(key)
-    if df is None:
-        _MEMO[key] = df = spark.read.parquet(path)
+    key = os.path.abspath(path)
+    stamp = (spark.sparkContext.applicationId, mtime)
+    app_id, ns, df = _MEMO.get(key, (None, None, None))
+    if (app_id, ns) != stamp:
+        df = spark.read.parquet(path)
+        _MEMO[key] = (*stamp, df)
     return df

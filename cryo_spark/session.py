@@ -9,6 +9,10 @@ same logical plans survive a 1000-executor / 100 TB deployment:
 - shuffle partitions sized for the local test harness; at cluster
   scale AQE coalesces or the deployer overrides
   ``spark.sql.shuffle.partitions``.
+
+Every engine conf is a constant here; a caller that needs another
+value passes it through ``get_spark(extra_conf=...)``, which is
+applied last.
 """
 
 from __future__ import annotations
@@ -17,7 +21,25 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
+
+
+def full_gc_every(master: str) -> int:
+    """Worker GC pacing period for ``master`` (see workerdaemon).
+
+    The gen-1-between-tasks policy (full collect every 10th task) won
+    its A/Bs on single-JVM ``local``/``local[N]``, but on a
+    multi-executor master it LOST 3/3 interleaved min-of-3 pairs on
+    local-cluster[2,4,2048] (gen1 vs stock totals: 8.81 vs 7.93,
+    7.31 vs 6.59, 7.22 vs 7.00 — OPTIMIZATION_r18.md): with several
+    python workers per executor the deferred full collects cost more
+    in allocation pressure than the skipped pauses save. Every other
+    master keeps the stock cadence (a full collect per task). On a
+    4-vCPU VM at local[4], freeze_online's traced executor run time
+    was 4.04 s per operation with pacing and 4.83 s without (median
+    of 10 alternating pairs, 8 won)."""
+    single_jvm = master.startswith("local") and not master.startswith("local-cluster")
+    return 10 if single_jvm else 1
 
 
 def get_spark(
@@ -34,7 +56,7 @@ def get_spark(
     # py4j reflection memo (py4jopt): installed here — the engine's
     # own session entry point — instead of at package import (r18,
     # ADVICE r17: importing a library must not patch py4j for the
-    # whole process). Idempotent; kill-switch SPARK_GRAFT_PY4J_MEMO=0.
+    # whole process). Idempotent.
     from cryo_spark import py4jopt
 
     py4jopt.install()
@@ -45,9 +67,10 @@ def get_spark(
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     n_cpus = str(os.cpu_count() or 8) if cpus == "*" else cpus
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
@@ -62,10 +85,7 @@ def get_spark(
         # (measured: ngram_jaccard 5.1s -> 2.9s at sf0.1 with 64 KB).
         # At cluster scale real partitions dwarf either threshold, so
         # this only affects the small-intermediate regime it targets.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION", "65536"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "65536")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # AQE inside cached plans (round 18, guide §2.2/§1.2 step 3):
         # Spark keeps AQE partition coalescing OFF under an
@@ -83,11 +103,7 @@ def get_spark(
         # Interleaved fresh-process A/B (min-of-3 per arm, 5 queries):
         # totals 11.82 -> 10.60 and 10.59 -> 10.02; minhash (persisted
         # verify pairs) 1.85 -> 1.41 and 1.64 -> 1.22.
-        # SPARK_GRAFT_CACHED_AQE=false restores stock.
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHED_AQE", "true"),
-        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Shuffle writer selection (round 17, guide §2.1): the
         # bypass-merge writer fires only when a shuffle has <=
         # bypassMergeThreshold partitions (stock 200) and no map-side
@@ -102,18 +118,12 @@ def get_spark(
         # construction: large shuffles exceed 200 partitions and never
         # used the bypass path — this only changes the small-shuffle
         # regime, where O(M) file ops strictly beat O(M x R) on any
-        # storage. SPARK_GRAFT_BYPASS_MERGE=200 restores stock.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_MERGE", "1"),
-        )
+        # storage.
+        .config("spark.shuffle.sort.bypassMergeThreshold", "1")
         # split small test files across cores (scans of row-grouped
         # files parallelize; no-op for many-file production layouts)
         .config("spark.sql.files.minPartitionNum", n_cpus)
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", "65536"),
-        )
+        .config("spark.sql.files.openCostInBytes", "65536")
         # Arrow for pandas UDF / toPandas boundaries (the only Python
         # hot paths we allow: keccak, u256 decimal strings, ABI decode).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -124,13 +134,9 @@ def get_spark(
         # driver latency for call-site strings in error messages:
         # measured on the round-17 funnel build, 10,765 -> 6,153 py4j
         # round trips (-43%) with the capture off. Driver-side cost at
-        # ANY cluster scale (plans are built on one machine), so off
-        # by default; re-enable for interactive debugging via
-        # SPARK_GRAFT_DF_DEBUG=true.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
-        )
+        # ANY cluster scale (plans are built on one machine), so off;
+        # re-enable for interactive debugging through extra_conf.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Generated-class cache (round 18, guide §7.3's "janino
         # codegen compiles for fresh plan segments" census item): the
         # stock 100-entry CodeGenerator cache is smaller than ONE
@@ -142,11 +148,8 @@ def get_spark(
         # 9.93 -> 7.74 and 9.91 -> 8.36. Scale-neutral: a per-JVM
         # bounded cache of compiled classes — production drivers and
         # executors run many more distinct plan shapes than 100, not
-        # fewer. SPARK_GRAFT_CODEGEN_CACHE restores any value.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
-        )
+        # fewer.
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -162,33 +165,19 @@ def get_spark(
     # stat() cost. Worker-side and per-task, so it matters MORE on a
     # large cluster (millions of Python tasks), not less; the package
     # just needs to be importable where workers fork (true here and in
-    # any --py-files/image deployment). SPARK_GRAFT_WORKER_DAEMON=0
-    # restores the stock daemon.
-    if os.environ.get("SPARK_GRAFT_WORKER_DAEMON", "1") != "0":
-        pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        worker_pp = os.pathsep.join(
-            p for p in (pkg_parent, os.environ.get("PYTHONPATH", "")) if p
+    # any --py-files/image deployment).
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_pp = os.pathsep.join(
+        p for p in (pkg_parent, os.environ.get("PYTHONPATH", "")) if p
+    )
+    builder = (
+        builder.config("spark.python.daemon.module", "cryo_spark.workerdaemon")
+        .config("spark.executorEnv.PYTHONPATH", worker_pp)
+        .config(
+            "spark.executorEnv.SPARK_GRAFT_FULL_GC_EVERY",
+            str(full_gc_every(master)),
         )
-        builder = (
-            builder.config("spark.python.daemon.module", "cryo_spark.workerdaemon")
-            .config("spark.executorEnv.PYTHONPATH", worker_pp)
-        )
-        # GC pacing default is MASTER-GATED as of r18: the r17
-        # gen-1-between-tasks policy (full collect every 10th task)
-        # won its A/Bs on single-JVM local[N], but on a multi-executor
-        # master it LOST 3/3 interleaved min-of-3 pairs on
-        # local-cluster[2,4,2048] (gen1 vs stock totals: 8.81 vs
-        # 7.93, 7.31 vs 6.59, 7.22 vs 7.00 — OPTIMIZATION_r18.md) —
-        # with several python workers per executor the deferred full
-        # collects cost more in allocation pressure than the skipped
-        # pauses save. Stock cadence (=1) is therefore the default off
-        # local[*]; an explicit SPARK_GRAFT_FULL_GC_EVERY always wins.
-        if "SPARK_GRAFT_FULL_GC_EVERY" not in os.environ:
-            is_local = (master or f"local[{cpus}]").startswith("local[")
-            builder = builder.config(
-                "spark.executorEnv.SPARK_GRAFT_FULL_GC_EVERY",
-                "10" if is_local else "1",
-            )
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -26,13 +26,13 @@ of Python tasks from a standard ``SPARK_HOME``-zip deployment pays it on
 every one.
 
 Wiring: :func:`cryo_spark.session.get_spark` sets
-``spark.python.daemon.module = cryo_spark.workerdaemon`` (kill-switch
-``SPARK_GRAFT_WORKER_DAEMON=0``) and appends this package's parent
-directory to ``spark.executorEnv.PYTHONPATH`` so the daemon can import
-the shim wherever the worker is forked.  On a multi-node cluster the
-package must be distributed to executors (``--py-files`` / conda env /
-image) — which this engine already requires for its by-reference UDF
-modules — or the conf simply left unset to run the stock daemon.
+``spark.python.daemon.module = cryo_spark.workerdaemon`` and appends
+this package's parent directory to ``spark.executorEnv.PYTHONPATH`` so
+the daemon can import the shim wherever the worker is forked.  On a
+multi-node cluster the package must be distributed to executors
+(``--py-files`` / conda env / image) — which this engine already
+requires for its by-reference UDF modules — or the conf set back to
+``pyspark.daemon`` through ``get_spark(extra_conf=...)``.
 """
 
 from __future__ import annotations
@@ -92,9 +92,10 @@ class GenerationalGcPolicy:
     Measured: summed worker-side GC time for one llm_embedding_sim
     bench run 74.8 s -> 7.1 s (-90%), same 1,825 collect calls.
 
-    ``SPARK_GRAFT_FULL_GC_EVERY`` tunes the period; ``1`` restores
-    the stock full-collect-per-task behavior (and
-    ``SPARK_GRAFT_WORKER_DAEMON=0`` bypasses this module entirely).
+    The period arrives in ``SPARK_GRAFT_FULL_GC_EVERY``, which
+    :func:`cryo_spark.session.get_spark` writes into the executor
+    environment from :func:`cryo_spark.session.full_gc_every`; ``1``
+    is the stock full-collect-per-task behavior.
     """
 
     def __init__(self, full_every: int | None = None) -> None:

@@ -396,16 +396,10 @@ def test_stamped_invalidate_rereads_only_on_change(tmp_path):
 def test_worker_daemon_conf_and_udf_roundtrip(spark):
     """get_spark wires the shim daemon in by default and pandas UDFs
     execute through it (workers fork from cryo_spark.workerdaemon)."""
-    import os
-
     import pandas as pd
     from pyspark.sql import functions as F
 
-    if os.environ.get("SPARK_GRAFT_WORKER_DAEMON", "1") != "0":
-        assert (
-            spark.conf.get("spark.python.daemon.module")
-            == "cryo_spark.workerdaemon"
-        )
+    assert spark.conf.get("spark.python.daemon.module") == "cryo_spark.workerdaemon"
 
     @F.pandas_udf("long")
     def plus_one(v: pd.Series) -> pd.Series:
@@ -448,7 +442,7 @@ def test_gc_policy_gen1_with_periodic_full(monkeypatch):
 
 
 def test_gc_policy_stock_behavior_and_passthrough(monkeypatch):
-    """full_every=1 (the SPARK_GRAFT_FULL_GC_EVERY=1 kill-switch) must
+    """full_every=1 (the cadence off single-JVM masters) must
     restore a full collect on every call, and an explicit generation
     argument must pass straight through to gc.collect."""
     import cryo_spark.workerdaemon as wd
@@ -471,21 +465,36 @@ def test_gc_policy_stock_behavior_and_passthrough(monkeypatch):
     assert seen == [(0,)]
 
 
-def test_gc_policy_env_default(monkeypatch):
-    """The period comes from SPARK_GRAFT_FULL_GC_EVERY (default 10,
-    floored at 1), and the daemon module's gc attribute carries the
+def test_gc_policy_env_default(spark):
+    """get_spark writes the master's period into the executor env the
+    daemon reads, and the daemon module's gc attribute carries the
     policy so the reuse loop at pyspark/daemon.py resolves to it."""
     import pyspark.daemon as d
 
     import cryo_spark.workerdaemon as wd
+    from cryo_spark.session import full_gc_every
 
-    monkeypatch.setenv("SPARK_GRAFT_FULL_GC_EVERY", "3")
-    assert wd.GenerationalGcPolicy().full_every == 3
-    monkeypatch.setenv("SPARK_GRAFT_FULL_GC_EVERY", "0")
-    assert wd.GenerationalGcPolicy().full_every == 1
+    conf = spark.sparkContext.getConf()
+    want = full_gc_every(spark.sparkContext.master)
+    assert conf.get("spark.executorEnv.SPARK_GRAFT_FULL_GC_EVERY") == str(want)
     assert isinstance(d.gc, wd.GenerationalGcPolicy)
     # the policy still exposes the rest of the gc API (delegation)
     assert d.gc.isenabled() in (True, False)
+
+
+@pytest.mark.parametrize("master, period", [
+    ("local", 10),
+    ("local[4]", 10),
+    ("local[*]", 10),
+    ("local-cluster[2,2,1024]", 1),
+    ("spark://h:7077", 1),
+])
+def test_full_gc_every_master_gate(master, period):
+    """Single-JVM masters, bare ``local`` included, get the paced
+    period; multi-executor masters keep the stock full collect."""
+    from cryo_spark.session import full_gc_every
+
+    assert full_gc_every(master) == period
 
 
 # ------------------ py4j reflection memo (cryo_spark/py4jopt.py)
@@ -538,18 +547,6 @@ def test_py4j_memo_caches_statics_and_skips_field_values(spark):
     f1 = loc_cls.SUNDAY  # int field -> plain value, uncached
     assert f1 == 1
     assert "SUNDAY" not in loc_cls.__dict__.get(p._CACHE_ATTR, {})
-
-
-def test_py4j_memo_kill_switch(monkeypatch):
-    """SPARK_GRAFT_PY4J_MEMO=0 must make install() a no-op."""
-    import cryo_spark.py4jopt as p
-
-    monkeypatch.setenv("SPARK_GRAFT_PY4J_MEMO", "0")
-    monkeypatch.setattr(p, "_installed", False)
-    before = p.JVMView.__getattr__
-    p.install()
-    assert p.JVMView.__getattr__ is before
-    assert not p._installed
 
 
 # ------------------ selectExpr-built merged_part_df (contract.py)
@@ -710,14 +707,17 @@ def test_token_count_expr_equals_token_count(spark, docs):
     assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
 
 
-def test_sort_shuffle_writer_default(spark):
-    """Engine sessions must default the bypass-merge threshold to 1
-    (sort-path shuffle writer: ONE file per map task instead of R
-    per-reducer files + a concat pass — round-17 thread dumps showed
-    the bypass writer's file churn as the dominant non-CPU run time
-    of every small-shuffle stage). SPARK_GRAFT_BYPASS_MERGE restores
-    stock behavior for A/B."""
-    import os
-
-    assert spark.conf.get("spark.shuffle.sort.bypassMergeThreshold") == \
-        os.environ.get("SPARK_GRAFT_BYPASS_MERGE", "1")
+def test_session_engine_constants(spark):
+    """The live session holds every engine constant get_spark sets
+    (see the measured reasons in session.py), e.g. bypass-merge 1:
+    the sort-path shuffle writer writes ONE file per map task instead
+    of R per-reducer files + a concat pass."""
+    want = {
+        "spark.shuffle.sort.bypassMergeThreshold": "1",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "65536",
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.sql.files.openCostInBytes": "65536",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        "spark.sql.codegen.cache.maxEntries": "5000",
+    }
+    assert {k: spark.conf.get(k) for k in want} == want

@@ -93,7 +93,8 @@ def test_py4j_memo_does_not_cache_packages(spark):
 def test_readcache_picks_up_nested_rewrite(spark, tmp_path):
     """A file rewritten in place inside a nested partition directory
     must invalidate the read memo even when the top-level directory's
-    mtime does not move (VERDICT r17 what's-wrong #2)."""
+    mtime does not move (VERDICT r17 what's-wrong #2), and the memo
+    keeps ONE entry per path however often that path is rewritten."""
     import os
     import time
 
@@ -102,17 +103,22 @@ def test_readcache_picks_up_nested_rewrite(spark, tmp_path):
     base = tmp_path / "tbl"
     sub = base / "part=a"
     sub.mkdir(parents=True)
+    n_memo = len(readcache._MEMO)
     spark.range(5).coalesce(1).write.mode("overwrite").parquet(str(sub))
     d1 = readcache.read_parquet_cached(spark, str(base))
     assert d1.count() == 5
-    time.sleep(0.02)
-    spark.range(9).coalesce(1).write.mode("overwrite").parquet(str(sub))
-    # freeze the TOP-LEVEL dir's mtime back so only the nested content
-    # is newer — the old single-level key would serve the stale frame
-    st = os.stat(base)
-    os.utime(base, ns=(st.st_atime_ns, st.st_mtime_ns - 10**9))
-    d2 = readcache.read_parquet_cached(spark, str(base))
-    assert d2.count() == 9
+    assert readcache.read_parquet_cached(spark, str(base)) is d1
+    for rows in (9, 12):
+        time.sleep(0.02)
+        spark.range(rows).coalesce(1).write.mode("overwrite").parquet(str(sub))
+        # freeze the TOP-LEVEL dir's mtime back so only the nested
+        # content is newer — a single-level key would serve the stale
+        # frame
+        st = os.stat(base)
+        os.utime(base, ns=(st.st_atime_ns, st.st_mtime_ns - 10**9))
+        assert readcache.read_parquet_cached(spark, str(base)).count() == rows
+    # three versions of one path read: one memo entry, not three
+    assert len(readcache._MEMO) == n_memo + 1
 
 
 # ------------------ dsir shared gram stream
@@ -242,3 +248,59 @@ def test_funnel_bg_materialization_values(spark, docs):
     assert sorted(map(tuple, fast.collect())) == sorted(
         map(tuple, slow.collect())
     )
+
+
+# ------------------ helper thread pools end with their call
+
+
+def _threads_settle_to(limit: int, timeout_s: float = 30.0) -> int:
+    """Poll until at most ``limit`` Python threads are alive (a
+    shut-down pool's worker exits once its queued work is done)."""
+    import threading
+    import time
+
+    deadline = time.monotonic() + timeout_s
+    while threading.active_count() > limit and time.monotonic() < deadline:
+        time.sleep(0.1)
+    return threading.active_count()
+
+
+def test_funnel_background_pool_exits(spark, docs):
+    """Repeated checkpointed funnels leave no background worker
+    thread behind, also when stage building raises after a lineage
+    cut was submitted: each run's single-worker pool is shut down
+    once its stages are built, not when its frame is collected."""
+    import threading
+
+    from cryo_spark.operators import corpus
+
+    small = docs.limit(120)
+    corpus.corpus_funnel(small, budget=40).collect()
+    before = _threads_settle_to(threading.active_count())
+    errors = []
+    for _ in range(3):
+        corpus.corpus_funnel(small, budget=40).collect()
+        # raises after the quality_lang_exact cut went to the pool; a
+        # caller keeping the error keeps the raising frame alive
+        with pytest.raises(ValueError, match="lm_keep_frac") as err:
+            corpus.corpus_funnel(small, budget=40, lm_keep_frac=1.5)
+        errors.append(err)
+    assert _threads_settle_to(before) <= before
+
+
+def test_q_ann_topk_pool_exits_on_error(spark, monkeypatch):
+    """An exception after q_ann_topk's two submits must not leak its
+    pool: the threads are gone when the exception reaches the caller."""
+    import threading
+
+    import __spark_entry__ as entrymod
+    from cryo_spark.operators import similarity
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("sample failed")
+
+    monkeypatch.setattr(similarity, "sample_matrix", boom)
+    before = threading.active_count()
+    with pytest.raises(RuntimeError, match="sample failed"):
+        entrymod.q_ann_topk(spark, SF_DIR)
+    assert threading.active_count() <= before
