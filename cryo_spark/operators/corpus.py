@@ -245,6 +245,9 @@ def _corpus_stages(
     # (round 15, ADVICE-adjacent); attached to the last stage frame
     # on return
     _persisted: list[DataFrame] = []
+    # the lineage cuts' frames: their LogicalRDD leaves hold the
+    # locally checkpointed RDDs a failed build must release
+    _cuts: list[DataFrame] = []
 
     # r18 (guide §2.6 — overlap independent work): a lazy
     # localCheckpoint cut executes its segment's SHUFFLE-MAP stages
@@ -294,6 +297,7 @@ def _corpus_stages(
                         if ent is not None and ent["reader"] is None:
                             ent["reader"] = pre_qe
                 frame = frame.localCheckpoint(eager=False)
+                _cuts.append(frame)
             if observations is not None:
                 # STRING-NAMED observe, deliberately NOT the
                 # pyspark Observation helper: instantiating
@@ -683,6 +687,22 @@ def _corpus_stages(
             # run's boundaries (plain Python attribute; harmless baggage)
             stages[-1][1]._cryo_persisted = _persisted
         return stages
+    except BaseException:
+        # no frame reaches the caller, so nothing could release this
+        # run's storage later: drop the queued counts, let a running
+        # one finish (releasing its cut under it fails that count),
+        # then free the boundary caches and the cuts' checkpointed RDDs
+        if _bg is not None:
+            _bg.shutdown(wait=True, cancel_futures=True)
+        try:
+            for f in _persisted:
+                f.unpersist()
+            for f in _cuts:
+                f._jdf.logicalPlan().rdd().unpersist(False)
+        except Exception:  # noqa: BLE001 - the build's own error wins
+            _log.warning("funnel: releasing a failed build's storage failed",
+                         exc_info=True)
+        raise
     finally:
         if _bg is not None:
             # queued counts still run; the worker exits after them

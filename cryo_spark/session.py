@@ -35,9 +35,10 @@ def full_gc_every(master: str) -> int:
     python workers per executor the deferred full collects cost more
     in allocation pressure than the skipped pauses save. Every other
     master keeps the stock cadence (a full collect per task). On a
-    4-vCPU VM at local[4], freeze_online's traced executor run time
-    was 4.04 s per operation with pacing and 4.83 s without (median
-    of 10 alternating pairs, 8 won)."""
+    4-vCPU VM at local[4], collect_replay's median operation took
+    0.396 s with pacing and 0.451 s without (10 alternating pairs,
+    all won); freeze_online's traced executor run time was 4.04 vs
+    4.83 s (8 of 10 won)."""
     single_jvm = master.startswith("local") and not master.startswith("local-cluster")
     return 10 if single_jvm else 1
 
@@ -148,7 +149,8 @@ def get_spark(
         # 9.93 -> 7.74 and 9.91 -> 8.36. Scale-neutral: a per-JVM
         # bounded cache of compiled classes — production drivers and
         # executors run many more distinct plan shapes than 100, not
-        # fewer.
+        # fewer. On collect_replay at local[4] (10 alternating pairs):
+        # first op 8.16 vs 8.87 s at 100 entries, 9 won.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -94,13 +94,14 @@ class GenerationalGcPolicy:
 
     The period arrives in ``SPARK_GRAFT_FULL_GC_EVERY``, which
     :func:`cryo_spark.session.get_spark` writes into the executor
-    environment from :func:`cryo_spark.session.full_gc_every`; ``1``
-    is the stock full-collect-per-task behavior.
+    environment from :func:`cryo_spark.session.full_gc_every`; ``1``,
+    also used when the variable is missing, is the stock
+    full-collect-per-task behavior.
     """
 
     def __init__(self, full_every: int | None = None) -> None:
         if full_every is None:
-            full_every = int(os.environ.get("SPARK_GRAFT_FULL_GC_EVERY", "10"))
+            full_every = int(os.environ.get("SPARK_GRAFT_FULL_GC_EVERY", "1"))
         self.full_every = max(1, full_every)
         self._n = 0
 

@@ -465,9 +465,10 @@ def test_gc_policy_stock_behavior_and_passthrough(monkeypatch):
     assert seen == [(0,)]
 
 
-def test_gc_policy_env_default(spark):
+def test_gc_policy_env_default(spark, monkeypatch):
     """get_spark writes the master's period into the executor env the
-    daemon reads, and the daemon module's gc attribute carries the
+    daemon reads, the policy reads it back from there (stock 1 when it
+    is missing), and the daemon module's gc attribute carries the
     policy so the reuse loop at pyspark/daemon.py resolves to it."""
     import pyspark.daemon as d
 
@@ -477,6 +478,10 @@ def test_gc_policy_env_default(spark):
     conf = spark.sparkContext.getConf()
     want = full_gc_every(spark.sparkContext.master)
     assert conf.get("spark.executorEnv.SPARK_GRAFT_FULL_GC_EVERY") == str(want)
+    monkeypatch.setenv("SPARK_GRAFT_FULL_GC_EVERY", str(want))
+    assert wd.GenerationalGcPolicy().full_every == want
+    monkeypatch.delenv("SPARK_GRAFT_FULL_GC_EVERY")
+    assert wd.GenerationalGcPolicy().full_every == 1
     assert isinstance(d.gc, wd.GenerationalGcPolicy)
     # the policy still exposes the rest of the gc API (delegation)
     assert d.gc.isenabled() in (True, False)
@@ -707,7 +712,7 @@ def test_token_count_expr_equals_token_count(spark, docs):
     assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
 
 
-def test_session_engine_constants(spark):
+def test_sort_shuffle_writer_default(spark):
     """The live session holds every engine constant get_spark sets
     (see the measured reasons in session.py), e.g. bypass-merge 1:
     the sort-path shuffle writer writes ONE file per map task instead

@@ -269,22 +269,27 @@ def test_funnel_background_pool_exits(spark, docs):
     """Repeated checkpointed funnels leave no background worker
     thread behind, also when stage building raises after a lineage
     cut was submitted: each run's single-worker pool is shut down
-    once its stages are built, not when its frame is collected."""
+    once its stages are built, not when its frame is collected. A
+    build that raises leaves no persisted RDD behind either."""
     import threading
 
     from cryo_spark.operators import corpus
 
     small = docs.limit(120)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
     corpus.corpus_funnel(small, budget=40).collect()
     before = _threads_settle_to(threading.active_count())
     errors = []
     for _ in range(3):
         corpus.corpus_funnel(small, budget=40).collect()
+        n_persistent = len(persistent())
         # raises after the quality_lang_exact cut went to the pool; a
         # caller keeping the error keeps the raising frame alive
         with pytest.raises(ValueError, match="lm_keep_frac") as err:
             corpus.corpus_funnel(small, budget=40, lm_keep_frac=1.5)
         errors.append(err)
+        # the failed build released its boundary caches and cut RDDs
+        assert len(persistent()) <= n_persistent
     assert _threads_settle_to(before) <= before
 
 
