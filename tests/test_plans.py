@@ -6,6 +6,12 @@ refactor can't silently lose them."""
 
 from __future__ import annotations
 
+import os
+import sys
+import time
+
+import pytest
+
 import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR
 
@@ -216,12 +222,22 @@ def test_span_dedup_keep_join_reuses_span_exchange(spark):
     assert n_hash_exchanges <= 4, plan[:2000]
 
 
-def test_headline_plan_snapshots(spark):
+def test_headline_plan_snapshots():
     """Round-8 plan-hash regression gate: the pinned headline queries'
     normalized physical-plan fingerprints must match the committed
     snapshot. A failure here means a plan SHAPE changed — a lost
     broadcast, a new Exchange, a degraded join strategy — which used
     to surface only as a timing drift a round later.
+
+    The fingerprints are computed in a child process whose session
+    runs at the snapshot's own conf (``shuffle_partitions=8`` and
+    ``spark.default.parallelism`` =
+    ``plan_snapshots.SNAPSHOT_PARALLELISM``), not in the suite's
+    ``local[$SPARK_GRAFT_CPUS]`` session: partition counts sized by
+    ``defaultParallelism`` are part of the pinned plan text, so the
+    check computes them at the width the snapshot was taken at and
+    gives the same verdict on any host. A child that fails or times
+    out fails this test with the tail of its output.
 
     If the change is INTENTIONAL: run
     ``python tools/update_plan_snapshots.py``, review the printed
@@ -229,7 +245,7 @@ def test_headline_plan_snapshots(spark):
     tests/plan_snapshots.json with the change that caused it."""
     from tools import plan_snapshots as ps
 
-    current = ps.compute_fingerprints(spark)
+    current = ps.fingerprints_at_snapshot_width()
     snapshot = ps.load_snapshot()
     assert set(current) == set(snapshot), (
         "pinned-query set drifted — regenerate the snapshot "
@@ -246,3 +262,47 @@ def test_headline_plan_snapshots(spark):
         "details:\n"
         + "\n\n".join(f"== {n} ==\n{current[n]['text']}" for n in sorted(moved))
     )
+
+
+def test_plan_snapshot_child_failure_surfaces(tmp_path):
+    """A fingerprint child that exits non-zero fails the gate with its
+    own output, never a skip or a silent pass."""
+    from tools import plan_snapshots as ps
+
+    crash = "import sys; sys.stderr.write('boom in child\\n'); sys.exit(3)"
+    with pytest.raises(RuntimeError, match=r"(?s)status 3.*boom in child"):
+        ps._run_child([sys.executable, "-c", crash], str(tmp_path), timeout=60)
+
+
+def _alive(pid: int) -> bool:
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except FileNotFoundError:
+        return False
+
+
+@pytest.mark.skipif(
+    not os.path.isdir("/proc/self"), reason="reads process state from /proc"
+)
+def test_plan_snapshot_child_timeout_kills_group(tmp_path):
+    """A fingerprint child that outlives its timeout fails the gate,
+    and its whole process group (where the gateway JVM runs) is gone
+    when the call returns."""
+    from tools import plan_snapshots as ps
+
+    pid_file = tmp_path / "grandchild.pid"
+    hang = (
+        "import subprocess, sys, time\n"
+        "p = subprocess.Popen([sys.executable, '-c', 'import time; time.sleep(120)'])\n"
+        f"open({str(pid_file)!r}, 'w').write(str(p.pid))\n"
+        "print('child started', flush=True)\n"
+        "time.sleep(120)\n"
+    )
+    with pytest.raises(RuntimeError, match=r"(?s)did not finish.*child started"):
+        ps._run_child([sys.executable, "-c", hang], str(tmp_path), timeout=5)
+    grandchild = int(pid_file.read_text())
+    deadline = time.monotonic() + 10
+    while _alive(grandchild) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not _alive(grandchild), "the child's process group outlived the timeout"

@@ -16,22 +16,53 @@ committed snapshot (`tests/plan_snapshots.json`):
 Fingerprints come from `bench.plan_fingerprint` (expression/plan ids,
 file paths and file-index contents normalized away), taken at the
 PLAN stage (AQE isFinalPlan=false) so nothing here executes the
-query. Shuffle-partition count appears in Exchange nodes, so snapshot
-and check must share session conf — both use the same
-``get_spark(shuffle_partitions=8)`` the test suite uses, at sf0.001.
+query. Session conf appears in the plan text, so snapshot and check
+must share it:
+
+- the shuffle-partition count appears in Exchange nodes — both use
+  ``get_spark(shuffle_partitions=8)``, at sf0.001;
+- the session width appears too: several operators size partitions
+  by ``defaultParallelism`` (``util.spread``'s round-robin target, the
+  posting-list repartition in ``dedup``, ``seqprep``'s packing), so a
+  ``local[4]`` session plans ``RoundRobinPartitioning(4)`` where the
+  snapshot's has ``(32)``. Both therefore run at
+  ``spark.default.parallelism`` = `SNAPSHOT_PARALLELISM`, whatever
+  the host's core count.
+
+A live SparkContext cannot change its width, so check and regenerate
+both compute the fingerprints in a fresh child Python process
+(`fingerprints_at_snapshot_width`) with that conf. The child's
+failures surface: a non-zero exit or a timeout raises with the tail
+of its output, and its process group (the gateway JVM included) is
+killed before the call returns.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import signal
+import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SNAPSHOT_PATH = os.path.join(REPO, "tests", "plan_snapshots.json")
 SF_DIR = "/root/testdata/sf0.001"
+
+#: session conf the committed snapshot was taken at (see the module
+#: docstring). The width is the ``local[32]`` the snapshot was first
+#: taken under; regenerating keeps it, so every host pins the same
+#: plans. Changing either value moves pins and needs a regenerate.
+SHUFFLE_PARTITIONS = 8
+SNAPSHOT_PARALLELISM = 32
+
+#: seconds the fingerprint child may take (about 30 s at local[4],
+#: mostly JVM start-up and the corpus_funnel build)
+CHILD_TIMEOUT_S = 300
 
 #: queries whose plan shape is load-bearing: the suite's most
 #: expensive entries plus every plan property a round has explicitly
@@ -194,12 +225,82 @@ def load_snapshot() -> dict[str, str]:
         return json.load(f)
 
 
-def main() -> int:
+def _emit(out_path: str) -> None:
+    """Child side: compute every pin at the snapshot's session conf,
+    write them as JSON to ``out_path``, then stop the gateway JVM and
+    wait for it, so a clean exit leaves nothing running."""
+    from pyspark import SparkContext
+
     from cryo_spark import get_spark
 
-    spark = get_spark(shuffle_partitions=8)
+    spark = get_spark(
+        shuffle_partitions=SHUFFLE_PARTITIONS,
+        extra_conf={"spark.default.parallelism": str(SNAPSHOT_PARALLELISM)},
+    )
     spark.sparkContext.setLogLevel("ERROR")
+    width = spark.sparkContext.defaultParallelism
+    if width != SNAPSHOT_PARALLELISM:
+        raise RuntimeError(
+            f"session width {width}, snapshot taken at {SNAPSHOT_PARALLELISM}"
+        )
     current = compute_fingerprints(spark)
+    with open(out_path, "w") as f:
+        json.dump(current, f)
+    jvm = SparkContext._gateway.proc
+    spark.stop()
+    jvm.stdin.close()  # the gateway JVM exits on EOF
+    jvm.wait(timeout=60)
+
+
+def _run_child(argv: list[str], tmp: str, timeout: float) -> None:
+    """Run ``argv`` from the repo root in its own process group, with
+    TMPDIR inside ``tmp``. Raises RuntimeError with the tail of its
+    output when it exits non-zero or outlives ``timeout``; the whole
+    group is killed before returning either way."""
+    env = {
+        k: v for k, v in os.environ.items()
+        # never attach to a gateway JVM this process was launched by
+        if not k.startswith("PYSPARK_GATEWAY_")
+    }
+    env["TMPDIR"] = tmp
+    log = os.path.join(tmp, "child.log")
+    with open(log, "wb") as out:
+        proc = subprocess.Popen(
+            argv, cwd=REPO, env=env, stdin=subprocess.DEVNULL,
+            stdout=out, stderr=subprocess.STDOUT, start_new_session=True,
+        )
+    try:
+        proc.wait(timeout=timeout)
+        failure = f"exited with status {proc.returncode}" if proc.returncode else None
+    except subprocess.TimeoutExpired:
+        failure = f"did not finish within {timeout} s"
+    finally:
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait()
+    if failure:
+        with open(log, "rb") as f:
+            text = f.read().decode(errors="replace").replace("\r", "\n")
+        tail = "\n".join([ln for ln in text.splitlines() if ln.strip()][-40:])
+        raise RuntimeError(f"plan-fingerprint child {failure}; output tail:\n{tail}")
+
+
+def fingerprints_at_snapshot_width() -> dict[str, dict[str, str]]:
+    """`compute_fingerprints` for every pin, in a fresh child process
+    whose session runs at the snapshot's width and shuffle partitions
+    — the same plans on any host, whatever session this one holds."""
+    with tempfile.TemporaryDirectory(prefix="plan_snap_") as tmp:
+        out = os.path.join(tmp, "fingerprints.json")
+        _run_child(
+            [sys.executable, os.path.abspath(__file__), "--emit", out],
+            tmp, CHILD_TIMEOUT_S,
+        )
+        with open(out) as f:
+            return json.load(f)
+
+
+def main() -> int:
+    current = fingerprints_at_snapshot_width()
     try:
         old = load_snapshot()
     except FileNotFoundError:
@@ -220,4 +321,7 @@ def main() -> int:
 
 
 if __name__ == "__main__":
+    if sys.argv[1:2] == ["--emit"]:
+        _emit(sys.argv[2])
+        raise SystemExit(0)
     raise SystemExit(main())
