@@ -17,6 +17,7 @@ import argparse
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import BinaryType, IntegralType, StringType
 
 from cryo_spark import io as cio
 from cryo_spark import plan as cplan
@@ -402,7 +403,18 @@ def _collect_impl(
 
     ``output_format`` mirrors _collect.py:72-82: 'spark' (the native
     frame, reference 'polars' analog), 'pandas', 'list' (row dicts),
-    'dict' (column lists)."""
+    'dict' (column lists).
+
+    Order contract (the reference sorts the collected frame in memory,
+    sort.rs:5-18): rows come out ascending on the sort keys, NULLs
+    first, binary as unsigned bytes, strings by code point; the order
+    of rows tied on every key is unspecified. The 'spark' output keeps
+    a lazy ``orderBy``. The other outputs are pulled unsorted and
+    sorted on the driver, which skips the global sort's sampling job
+    and exchange, when every key is an integer, binary or plain
+    string column. Any other key type (float, double, ...) sorts in
+    Spark: once in pandas, a float key's NULL and NaN are both NaN,
+    but Spark puts NULL first and NaN last."""
     if blocks is None and start_block is not None:
         blocks = f"{start_block}:{end_block if end_block is not None else ''}"
     if txs is not None:
@@ -459,17 +471,23 @@ def _collect_impl(
         exclude_failed=exclude_failed, event_signature=event_signature,
         fixtures_dir=fixtures_dir, dims=q.dims,
     )
-    sort_cols = _resolve_sort(get_spec(datatype), sort, 1)
-    if sort_cols:
-        keys = [c for c in sort_cols if c in df.columns]
-        unknown = [c for c in sort_cols if c not in df.columns and sort is not True]
-        if unknown:
-            raise ValueError(f"unknown sort columns: {unknown}")
-        if keys:
-            df = df.orderBy(*keys)
+    sort_cols = _resolve_sort(get_spec(datatype), sort, 1) or []
+    keys = [c for c in sort_cols if c in df.columns]
+    unknown = [c for c in sort_cols if c not in df.columns and sort is not True]
+    if unknown:
+        raise ValueError(f"unknown sort columns: {unknown}")
+    types = {f.name: f.dataType for f in df.schema.fields}
+    driver_sort = output_format != "spark" and all(
+        isinstance(types[k], (IntegralType, BinaryType)) or types[k] == StringType()
+        for k in keys
+    )
+    if keys and not driver_sort:
+        df = df.orderBy(*keys)
     if output_format == "spark":
         return df
     pdf = df.toPandas()  # Arrow path (session enables arrow.pyspark)
+    if keys and driver_sort:
+        pdf = pdf.sort_values(keys, na_position="first", kind="stable", ignore_index=True)
     if output_format == "pandas":
         return pdf
     if output_format == "polars":

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -750,3 +751,128 @@ def test_collect_polars_output_format_gated(spark, fixtures_dir):
                 spark, "blocks", blocks="0:5", fixtures_dir=fixtures_dir,
                 output_format="polars",
             )
+
+
+# ---------------------------------------------------------------------------
+# collect order contract: non-spark outputs are sorted on the driver and
+# must come out in the order of the lazy orderBy the spark output keeps
+# ---------------------------------------------------------------------------
+
+def _replay_specs(fixtures_dir):
+    """The benchmark's first round at seed 1: one call per COLLECT_KINDS
+    entry, with the inputs the benchmark gives it."""
+    from perfbench.workloads import COLLECT_KINDS, CollectReplay
+
+    wl = CollectReplay(os.path.dirname(fixtures_dir), None, 1)
+    try:
+        return [wl.prepare(i) for i in range(1, len(COLLECT_KINDS) + 1)]
+    finally:
+        wl.close()
+
+
+#: explicit sort lists: a binary key, the same key as a hex string, a
+#: binary and an integer key holding NULLs, and keys with ties and NULLs
+_EXPLICIT_SORTS = [
+    ("logs", {"blocks": "100:140", "sort": ["address"]}),
+    ("logs", {"blocks": "100:140", "sort": ["address"], "hex": True}),
+    ("logs", {"blocks": "100:140", "sort": ["topic1"]}),
+    ("blocks", {"blocks": "50:150", "sort": ["base_fee_per_gas"]}),
+    ("traces", {"blocks": "300:310", "sort": ["block_number", "transaction_index"]}),
+]
+
+
+@pytest.fixture(scope="module")
+def order_cases(spark, fixtures_dir):
+    """(dataset, kwargs, sort keys, spark frame, its orderBy toPandas)
+    for every benchmark call kind and every explicit sort list."""
+    from cryo_spark.schemas import get_spec
+
+    cases = [(s["dataset"], s["kwargs"]) for s in _replay_specs(fixtures_dir)]
+    out = []
+    for dataset, kwargs in cases + _EXPLICIT_SORTS:
+        kwargs = {"fixtures_dir": fixtures_dir, **kwargs}
+        sdf = api.collect(spark, dataset, output_format="spark", **kwargs)
+        keys = [c for c in kwargs.get("sort", get_spec(dataset).sort) if c in sdf.columns]
+        out.append((dataset, kwargs, keys, sdf, sdf.toPandas()))
+    return out
+
+
+def _key_rows(rows, keys):
+    return [tuple(None if pd.isna(r[k]) else r[k] for k in keys) for r in rows]
+
+
+def test_collect_row_order_matches_orderby(spark, order_cases):
+    """pandas/list/dict outputs list the sort keys in the orderBy order
+    (ties in any order: full rows compare as a multiset)."""
+    from perfbench.workloads import _frame_hash
+
+    for dataset, kwargs, keys, _, ref in order_cases:
+        want = _key_rows(ref.to_dict(orient="records"), keys)
+        got = api.collect(spark, dataset, output_format="pandas", **kwargs)
+        assert _key_rows(got.to_dict(orient="records"), keys) == want, (dataset, kwargs)
+        assert (len(got), _frame_hash(got)) == (len(ref), _frame_hash(ref)), (dataset, kwargs)
+        rows = api.collect(spark, dataset, output_format="list", **kwargs)
+        assert _key_rows(rows, keys) == want, (dataset, kwargs)
+        cols = api.collect(spark, dataset, output_format="dict", **kwargs)
+        assert _key_rows([dict(zip(cols, r)) for r in zip(*cols.values())], keys) == want
+    # the explicit cases hold what they are named for
+    address, address_hex, topic1, base_fee, traces = [r for _, k, _, _, r in order_cases if "sort" in k]
+    assert isinstance(address["address"][0], bytes) and isinstance(address_hex["address"][0], str)
+    assert topic1["topic1"].isna().any() and base_fee["base_fee_per_gas"].isna().any()
+    assert traces.duplicated(["block_number", "transaction_index"]).any()
+
+
+def test_collect_values_and_dtypes_match_orderby(spark, order_cases):
+    """The driver sort only permutes toPandas()'s rows: same columns,
+    dtypes and cells as the orderBy spelling, binary cells stay bytes,
+    and the benchmark's dtype-sensitive frame hash agrees."""
+    from pyspark.sql.types import BinaryType
+
+    from perfbench.workloads import _frame_hash
+
+    def canon(frame):
+        return frame.sort_values(
+            list(frame.columns), na_position="first", kind="stable", ignore_index=True
+        )
+
+    for dataset, kwargs, _, sdf, ref in order_cases:
+        got = api.collect(spark, dataset, output_format="pandas", **kwargs)
+        assert isinstance(got.index, pd.RangeIndex) and got.index.equals(pd.RangeIndex(len(got)))
+        pd.testing.assert_frame_equal(canon(got), canon(ref), check_dtype=True)
+        assert _frame_hash(got) == _frame_hash(ref), (dataset, kwargs)
+        for f in sdf.schema.fields:
+            if isinstance(f.dataType, BinaryType):
+                assert all(type(v) is bytes for v in got[f.name].dropna()), (dataset, f.name)
+
+
+def test_collect_float_sort_key_keeps_spark_order(spark, monkeypatch):
+    """A double key's NULL sorts first and its NaN last in Spark, but
+    both are NaN after toPandas; such keys keep the orderBy."""
+    frame = spark.createDataFrame(
+        [(1, float("nan")), (2, 2.0), (3, None), (4, -1.0), (5, 0.0)], "id long, x double"
+    )
+    monkeypatch.setattr(api, "_base_frame", lambda *a, **k: frame)
+    want = frame.orderBy("x").toPandas()
+    assert list(want["id"]) == [3, 4, 5, 2, 1]
+    got = api.collect(spark, "blocks", blocks="0:1", sort=["x"], output_format="pandas")
+    assert list(got["id"]) == list(want["id"])
+    # a driver-only sort cannot tell the two apart
+    driver = frame.toPandas().sort_values("x", na_position="first", kind="stable")
+    assert list(driver["id"]) != list(want["id"])
+
+
+def test_collect_pandas_submits_one_job(spark, fixtures_dir):
+    """No range-sampling job or exchange in front of toPandas: a warm
+    pandas collect is one Spark job; the spark output stays sorted."""
+    sc = spark.sparkContext
+    kwargs = {"blocks": "10:50", "fixtures_dir": fixtures_dir}
+    api.collect(spark, "blocks", output_format="pandas", **kwargs)  # warm the read
+    sc.setJobGroup("collect_pandas_one_job", "collect_pandas_one_job")
+    try:
+        api.collect(spark, "blocks", output_format="pandas", **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("collect_pandas_one_job")) == 1
+    lazy = api.collect(spark, "blocks", output_format="spark", **kwargs)
+    assert "Sort [" in lazy._jdf.queryExecution().optimizedPlan().toString()
