@@ -57,10 +57,6 @@ def _addr_topic(addr: bytes) -> bytes:
     return b"\x00" * 12 + addr
 
 
-def _dec38(values: list[int]) -> pa.Array:
-    return pa.array(values, type=pa.decimal128(38, 0))
-
-
 def _u256blob(values: list) -> pa.Array:
     """u256 quantities land as canonical 32-byte big-endian words (the
     carrier the engine keeps end-to-end; value magnitudes stay below

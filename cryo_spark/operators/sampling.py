@@ -107,22 +107,6 @@ def hash_sample(
     return df.filter(cond if cond is not None else F.lit(False))
 
 
-def hash_sample_sql(
-    table: str,
-    fractions: dict[str, float],
-    strata_col: str = "source",
-    id_expr: str = "doc_id",
-    seed: str = "sample0",
-) -> str:
-    b = _bucket_sql(id_expr, seed)
-    parts = []
-    for value, frac in fractions.items():
-        guard = "TRUE" if frac >= 1.0 else f"{b} < '{_threshold(frac)}'"
-        parts.append(f"({strata_col} = '{value}' AND {guard})")
-    pred = " OR ".join(parts) if parts else "FALSE"
-    return f"SELECT * FROM {table} WHERE {pred}"
-
-
 def stratified_sample_exact(
     df: DataFrame,
     fractions: dict[str, float],

@@ -147,24 +147,6 @@ def frame_luma(data: bytes, frame_no: int) -> bytes | None:
     return None
 
 
-def frame_gray_resized(
-    data: bytes, frame_no: int, out_w: int, out_h: int
-) -> list[list[float]] | None:
-    """Luma of frame ``frame_no`` box-resampled to out_w x out_h —
-    the same deterministic kernel the PNG/JPEG vendored paths use
-    (:func:`cryo_spark.operators.pngcodec.box_resize`), so a video
-    frame and the identical still image produce the SAME dHash."""
-    from cryo_spark.operators.pngcodec import box_resize
-
-    hdr = parse_header(data)
-    y = frame_luma(data, frame_no)
-    if y is None:
-        return None
-    w = hdr["width"]
-    grid = [list(y[r * w:(r + 1) * w]) for r in range(hdr["height"])]
-    return box_resize(grid, out_w, out_h)
-
-
 def encode_y4m(
     width: int,
     height: int,

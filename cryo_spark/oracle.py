@@ -73,10 +73,6 @@ def trace_sort_key_sql(col_expr: str = "trace_address") -> str:
     return f"CASE WHEN {col_expr} = '' THEN '' ELSE {padded} END"
 
 
-def hex_encode_sql(blob_expr: str) -> str:
-    return f"concat('0x', lower(hex({blob_expr})))"
-
-
 def blob_slice_sql(blob_expr: str, start: int, length: int) -> str:
     """DuckDB blob substring (1-based, like Spark substring on binary).
     DuckDB has no native blob slicing — round-trip through hex."""

@@ -13,12 +13,42 @@ same logical plans survive a 1000-executor / 100 TB deployment:
 Every engine conf is a constant here; a caller that needs another
 value passes it through ``get_spark(extra_conf=...)``, which is
 applied last.
+
+Driver JVM cold start (class-data archive). When ``get_spark``
+launches a new gateway JVM it starts that JVM from a dynamic AppCDS
+archive kept in ``$XDG_CACHE_HOME/cryo_spark/cds`` (default
+``~/.cache/cryo_spark/cds``), one archive per JDK and Spark jar set
+(:func:`cds_key`). The first such JVM on a host runs with
+``-XX:ArchiveClassesAtExit`` and writes ``<key>.<pid>.tmp`` as it
+exits; an ``atexit`` hook waits for that exit and renames the file to
+``<key>.jsa`` only when the JVM exited with status 0, because a
+truncated archive aborts any JVM handed it. Every later JVM maps the
+archive with ``-XX:SharedArchiveFile=<key>.jsa -Xshare:auto``. An
+archive maps only under the classpath it was dumped with, and a dump
+refuses a non-empty directory on it; Spark puts ``$SPARK_CONF_DIR``
+first, so the archive is used only when that dir is unset and the
+default one holds nothing but ``*.template`` files, in which case
+``SPARK_CONF_DIR`` is pointed at an empty dir in the cache. A custom
+conf dir, an unwritable cache or a gateway this process did not
+launch gets no flags. :func:`cds_launch` decides;
+:func:`promote_archive` renames and prunes. Deleting the cache dir
+resets it.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
+import re
+import shutil
+import subprocess
+import tempfile
+from typing import NamedTuple
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
@@ -41,6 +71,156 @@ def full_gc_every(master: str) -> int:
     4.83 s (8 of 10 won)."""
     single_jvm = master.startswith("local") and not master.startswith("local-cluster")
     return 10 if single_jvm else 1
+
+
+# Unified-logging flags for a JVM started with archive flags: a dump
+# prints one "[warning][cds] Preload Warning" line per class it cannot
+# archive (1,294 on a collect run) on the JVM's stdout, which the
+# Python process shares. CDS logging goes nowhere; other JVM warnings
+# go to stderr.
+CDS_LOG_FLAGS = "-Xlog:disable -Xlog:all=warning:stderr -Xlog:cds*=off:stderr"
+# How long the exit hook waits for a dumping JVM to write its archive.
+CDS_DUMP_WAIT_S = 120
+
+
+class CdsLaunch(NamedTuple):
+    """Archive flags for one gateway JVM launch. ``dump_path`` is the
+    pid-tagged file a dumping JVM writes at exit (None when it maps
+    ``archive``)."""
+
+    java_options: str
+    archive: str
+    dump_path: str | None
+
+
+def cds_cache_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache"
+    )
+    return os.path.join(base, "cryo_spark", "cds")
+
+
+def cds_key(spark_home: str) -> str | None:
+    """Hash of the ``java`` spark-submit runs (realpath plus the JDK's
+    ``release`` file) and the name and size of each Spark jar; None
+    when either cannot be read."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if not java or not os.path.isfile(java):
+        return None
+    java = os.path.realpath(java)
+    jars = os.path.join(spark_home, "jars")
+    h = hashlib.sha256(java.encode())
+    try:
+        with open(os.path.join(os.path.dirname(os.path.dirname(java)), "release"), "rb") as f:
+            h.update(f.read())
+        for name in sorted(os.listdir(jars)):
+            h.update(f"\0{name}\0{os.path.getsize(os.path.join(jars, name))}".encode())
+    except OSError:
+        return None
+    return h.hexdigest()[:20]
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def cds_launch(cache_dir: str, spark_home: str) -> CdsLaunch | None:
+    """Archive flags for a new gateway JVM, or None to launch it as
+    before. Sets ``SPARK_CONF_DIR`` to the cache's empty conf dir when
+    it returns flags and the variable was unset; touches nothing in
+    ``os.environ`` when it returns None."""
+    # Spark's launcher splits Java options on whitespace and quotes, and
+    # the conf dir goes on a ':'-separated classpath.
+    if "PYSPARK_GATEWAY_PORT" in os.environ or re.search(r"[\s\"'\\:]", cache_dir):
+        return None
+    empty_conf = os.path.join(cache_dir, "conf")
+    preset = os.environ.get("SPARK_CONF_DIR")
+    default_conf = os.path.join(spark_home, "conf")
+    try:
+        if preset is not None:
+            if os.path.realpath(preset) != os.path.realpath(empty_conf):
+                return None
+        elif os.path.isdir(default_conf) and any(
+            not n.endswith(".template") for n in os.listdir(default_conf)
+        ):
+            return None
+        os.makedirs(empty_conf, exist_ok=True)
+        # a real write, not os.access: permission bits say nothing to root
+        tempfile.TemporaryFile(dir=cache_dir).close()
+        if os.listdir(empty_conf):
+            return None
+    except OSError:
+        return None
+    key = cds_key(spark_home)
+    if key is None:
+        return None
+    archive = os.path.join(cache_dir, f"{key}.jsa")
+    if os.path.isfile(archive):
+        launch = CdsLaunch(
+            f"-XX:SharedArchiveFile={archive} -Xshare:auto {CDS_LOG_FLAGS}", archive, None
+        )
+    else:
+        dump = os.path.join(cache_dir, f"{key}.{os.getpid()}.tmp")
+        if os.path.exists(dump):  # an earlier JVM of this process wrote it
+            return None
+        launch = CdsLaunch(f"-XX:ArchiveClassesAtExit={dump} {CDS_LOG_FLAGS}", archive, dump)
+    if preset is None:
+        os.environ["SPARK_CONF_DIR"] = empty_conf
+    return launch
+
+
+def promote_archive(returncode: int | None, dump_path: str, archive: str) -> bool:
+    """Rename ``dump_path`` to ``archive`` when its JVM exited with 0,
+    else delete it. Promotion also deletes other keys' archives and
+    dumps, and this key's dumps whose writer is gone."""
+    if returncode != 0 or not os.path.isfile(dump_path):
+        with contextlib.suppress(OSError):
+            os.remove(dump_path)
+        return False
+    try:
+        os.replace(dump_path, archive)
+    except OSError:
+        return False
+    cache_dir, keep = os.path.split(archive)
+    key = keep[: -len(".jsa")]
+    for name in os.listdir(cache_dir):
+        parts = name.split(".")
+        if name == keep or parts[-1] not in ("jsa", "tmp"):
+            continue
+        if parts[0] == key and len(parts) == 3 and parts[1].isdigit() and _pid_alive(int(parts[1])):
+            continue
+        with contextlib.suppress(OSError):
+            os.remove(os.path.join(cache_dir, name))
+    return True
+
+
+def _promote_at_exit(proc: subprocess.Popen, dump_path: str, archive: str) -> None:
+    """Exit hook of a dumping launch: the gateway JVM exits on EOF of
+    its stdin and writes the archive as it exits, so close that pipe
+    (a no-op after a caller's own shutdown) and wait for the exit. A
+    context still open on that JVM is stopped first; otherwise its
+    accumulator server prints a traceback when the JVM goes away."""
+    try:
+        sc = SparkContext._active_spark_context
+        if proc.poll() is None and sc is not None and getattr(sc._gateway, "proc", None) is proc:
+            sc.stop()
+    finally:
+        if proc.poll() is None:
+            with contextlib.suppress(OSError):
+                proc.stdin.close()
+            try:
+                proc.wait(timeout=CDS_DUMP_WAIT_S)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+        promote_archive(proc.returncode, dump_path, archive)
 
 
 def get_spark(
@@ -180,6 +360,17 @@ def get_spark(
             str(full_gc_every(master)),
         )
     )
+    # Archive flags go in the driver's default Java options, so a
+    # caller's spark.driver.extraJavaOptions is kept as given.
+    launch = None
+    if SparkContext._gateway is None:
+        launch = cds_launch(cds_cache_dir(), _find_spark_home())
+    if launch is not None:
+        builder = builder.config("spark.driver.defaultJavaOptions", launch.java_options)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if launch is not None and launch.dump_path and proc is not None:
+        atexit.register(_promote_at_exit, proc, launch.dump_path, launch.archive)
+    return spark

@@ -126,24 +126,6 @@ def cdx_capture_id_expr(url_col: str = "url", ts_col: str = "ts") -> "F.Column":
     )
 
 
-def cdx_sql(expr: str) -> str:
-    """DuckDB twin of :func:`read_cdx`'s parse for a single CDXJ line
-    expression — used by tests to differential-check the JVM parse."""
-    j = f"substring({expr}, instr({expr}, '{{'))"
-    return (
-        f"struct_pack("
-        f"urlkey := split_part({expr}, ' ', 1), "
-        f"ts := strptime(split_part({expr}, ' ', 2), '%Y%m%d%H%M%S'), "
-        f"url := json_extract_string({j}, '$.url'), "
-        f"mime := json_extract_string({j}, '$.mime'), "
-        f"status := try_cast(json_extract_string({j}, '$.status') AS INTEGER), "
-        f"digest := json_extract_string({j}, '$.digest'), "
-        f"length := try_cast(json_extract_string({j}, '$.length') AS BIGINT), "
-        f"\"offset\" := try_cast(json_extract_string({j}, '$.offset') AS BIGINT), "
-        f"filename := json_extract_string({j}, '$.filename'))"
-    )
-
-
 def fetch_cdx_records(
     spark: SparkSession,
     cdx: DataFrame,
