@@ -317,7 +317,11 @@ def ngram_jaccard_all_pairs(
     exact verify, built over candidate docs ONLY (semi-join prune
     before the collect_set) and consumed via candidate-bounded
     enrichment joins (_verify_pairs) — the corpus-sized stream never
-    re-shuffles and no unbounded frame is ever broadcast."""
+    re-shuffles and no unbounded frame is ever broadcast.
+
+    Precondition: ``id_col`` is non-NULL. A shingle's document
+    frequency is ``count(*)`` over deduplicated ``(shingle, id)`` rows,
+    so a NULL id would count as one more document."""
     sh = shingles if shingles is not None else shingle_rows(df, text_col, n, id_col)
     # r18 (guide §2.4 — share one exchange): the df-count and the
     # posting lists used to run on SEPARATE scans of the shingle
@@ -397,7 +401,8 @@ def ngram_jaccard_all_pairs_sql(
     max_df: int = 50,
     min_shared: int = 5,
 ) -> str:
-    """DuckDB equivalent of ngram_jaccard_all_pairs (n=3)."""
+    """DuckDB equivalent of ngram_jaccard_all_pairs (n=3). Same
+    precondition: ``doc_id`` is non-NULL."""
     norm = f"regexp_replace(trim(lower({text_col})), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')"
     return f"""
 WITH toks AS (
@@ -652,8 +657,9 @@ def embedding_near_dups_exact(
     per-pair zip_with does the same work interpreted and measured
     ~40x slower.
 
-    Ground-truth path; use :func:`embedding_near_dups`
-    (hyperplane-LSH buckets) when N^2 is out of reach."""
+    Ground-truth path; use the hyperplane-LSH tiers in
+    :mod:`cryo_spark.operators.similarity` (:func:`lsh_topk`) when N^2
+    is out of reach."""
     spark = emb.sparkSession
     nb = n_blocks
     # membership: block b acts as the Left side of pairs (b, j>=b) and
@@ -727,70 +733,6 @@ SELECT a.{id_col} AS id_a, b.{id_col} AS id_b,
 FROM {table} a JOIN {table} b ON a.{id_col} < b.{id_col}
 WHERE round({dot} / ({nrm.format(s='a')} * {nrm.format(s='b')}), 6) >= {threshold}
 """
-
-
-def embedding_near_dups(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via random-hyperplane LSH
-    bucketing + in-bucket exact cosine. Deterministic planes from
-    ``seed``. Returns (id_a, id_b, cosine >= threshold)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.normal(size=(n_planes, 64))
-    sig = None
-    for p in range(n_planes):
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.array(*[F.lit(float(x)) for x in planes[p]]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2**p)
-        sig = bit if sig is None else sig + bit
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col(vec_col), lambda x: x.cast("double") * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    keyed = emb.select(
-        F.col(id_col), F.col(vec_col), sig.alias("bucket"), norm.alias("nrm")
-    )
-    # corpus-sized SELF-join: both sides are the whole corpus by
-    # construction, so the band/bucket join must never be planned as a
-    # broadcast — a stats misestimate behind a lineage-cut LogicalRDD
-    # can look "small" and OOM the driver building the table (the
-    # knn_graph 1M incident, round 15); the hint pins shuffle-hash
-    keyed = keyed.hint("shuffle_hash")
-    a, b = keyed.alias("a"), keyed.alias("b")
-    dot_ab = F.aggregate(
-        F.zip_with(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"),
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            (dot_ab / (F.col("a.nrm") * F.col("b.nrm"))).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -244,7 +244,7 @@ def hashed_mlp_encoder(
     that the GEMM dominates. The batch path is one (batch, n_features)
     @ (n_features, hidden) @ (hidden, dim) chain — BLAS-bound, which
     is exactly the "throughput is model-bound, not Spark-bound" claim
-    the stress receipt (tools/stress_encode.py, SCALE.md) measures."""
+    the stress receipt in SCALE.md measured."""
     import re
     import zlib
 

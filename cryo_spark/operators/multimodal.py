@@ -428,16 +428,9 @@ def _dhash_sig_expr(chains: list, payload_col) -> "F.Column":
     return F.when(payload_col.isNull(), F.lit(None).cast("long")).otherwise(sig)
 
 
-def fake_dhash_expr(payload_col) -> "F.Column":
-    """Inline (single-expression) form of the fake-grid dHash — for
-    ad-hoc use and cross-engine parity tests; :func:`image_dhash`
-    uses the bound two-step form."""
-    return _dhash_sig_expr(_dhash_chain_cols(payload_col), payload_col)
-
-
 def fake_dhash_duckdb_expr(payload_sql: str) -> str:
     """DuckDB scalar expression (HUGEINT, unsigned 0..2^64) equal
-    bit-for-bit to :func:`fake_dhash_expr`'s signature: digest byte p
+    bit-for-bit to :func:`image_dhash`'s fake-grid signature: digest byte p
     of md5(hex(payload)||':'||i) comes from md5_number_upper (p<8) or
     md5_number_lower (p>=8), both little-endian — the byte mapping is
     pinned cross-engine in tests. Wrap with the 2^63 subtraction to
@@ -496,7 +489,7 @@ def real_dhash(payload: bytes, decoder: str = "vendored") -> int | None:
     pixel[r][c] < pixel[r][c+1]. Returns a signed 64-bit int (two's
     complement). PNG payloads run unconditionally through the
     vendored codec (round 13 — previously PIL-gated); non-PNG formats
-    require PIL. The fake-grid JVM expression (`fake_dhash_expr`)
+    require PIL. The fake-grid JVM expression (:func:`image_dhash`)
     remains the zero-Python pipeline default. ``decoder='pil'``/'auto'
     is the throughput escape hatch for real image corpora — C-speed
     decode, but hashes can drift from the vendored path and across PIL

@@ -512,7 +512,7 @@ def lsh_topk_multiprobe(
     query ALMOST hashed to, so the same probe budget buys more recall
     than blind hamming enumeration (the r12 stress point read
     recall@10 0.60; this tier targets >=0.8 at <=2x the query time —
-    tools/stress_ann.py records the numbers). ``n_planes=None``
+    SCALE.md records the numbers). ``n_planes=None``
     auto-sizes from a corpus count (:func:`default_n_planes`). Same
     engine-neutral integer signatures as :func:`lsh_topk`; the DuckDB
     twin :func:`lsh_topk_multiprobe_sql` reproduces the row set

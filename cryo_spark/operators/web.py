@@ -421,95 +421,3 @@ def url_host_filter_sql(
     m = url_host_matches_sql(url_col, domains)
     neg = "NOT " if mode == "block" else ""
     return f"SELECT * FROM {table} WHERE {neg}({m})"
-
-
-def changed_documents(
-    new_docs: DataFrame,
-    prior_docs: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    prior_text_col: str | None = None,
-) -> DataFrame:
-    """FRESHNESS filter for re-crawls: the rows of ``new_docs`` whose
-    content actually differs from every prior capture of the same
-    page — the step after incremental re-extraction ("fetch only what
-    the ledger hasn't covered") that drops refetched-but-identical
-    pages before they cost pipeline work. Pages are keyed by
-    :func:`canonical_url` (scheme/www/tracking-param noise collapses)
-    and compared by the SAME normalized content key exact dedup uses,
-    so cosmetic whitespace changes do not count as changes.
-
-    Returns the surviving ``new_docs`` rows plus a ``change`` column:
-    'new' (no prior capture of the url) or 'changed' (prior capture
-    exists, content differs). Unchanged rows are dropped. For
-    NEAR-change tolerance (boilerplate rotations), pipe the survivors
-    through the delta near-dup machinery instead
-    (``corpus.prepare_corpus_delta`` / ``incremental``) — exact
-    change detection and near-dedup are different thresholds of the
-    same question and compose in that order.
-
-    Scale shape: the prior side reduces to distinct (url key, content
-    key) pairs — never broadcast (a prior corpus is corpus-sized);
-    one anti-join and one left semi-style label join, both on the
-    same url-key exchange."""
-    from cryo_spark.operators import dedup
-
-    canon = canonical_url(url_col)
-    prior_keys = prior_docs.select(
-        canonical_url(url_col).alias("_cd_url"),
-        F.md5(
-            dedup._norm_text(prior_text_col or text_col)
-        ).alias("_cd_ck"),
-    ).distinct()
-    new_k = new_docs.withColumn("_cd_url", canon).withColumn(
-        "_cd_ck", F.md5(dedup._norm_text(text_col))
-    )
-    survivors = new_k.join(prior_keys, ["_cd_url", "_cd_ck"], "left_anti")
-    seen_urls = prior_keys.select("_cd_url").distinct().withColumn(
-        "_cd_seen", F.lit(True)
-    )
-    return (
-        survivors.join(seen_urls, "_cd_url", "left")
-        .withColumn(
-            "change",
-            F.when(F.col("_cd_seen"), F.lit("changed")).otherwise(
-                F.lit("new")
-            ),
-        )
-        .drop("_cd_url", "_cd_ck", "_cd_seen")
-    )
-
-
-def changed_documents_sql(
-    new_table: str,
-    prior_table: str,
-    url_col: str = "url",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    """DuckDB twin of :func:`changed_documents` (ids + change labels)
-    for differential tests."""
-    canon_n = canonical_url_sql(f"n.{url_col}")
-    canon_p = canonical_url_sql(f"p.{url_col}")
-    norm = (
-        "md5(regexp_replace(trim(lower(p.{t})), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'))"
-    ).format(t=text_col)
-    norm_n = (
-        "md5(regexp_replace(trim(lower(n.{t})), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'))"
-    ).format(t=text_col)
-    return f"""
-WITH prior_keys AS (
-  SELECT DISTINCT {canon_p} AS u, {norm} AS ck FROM {prior_table} p
-),
-new_k AS (
-  SELECT n.{id_col} AS {id_col}, {canon_n} AS u, {norm_n} AS ck
-  FROM {new_table} n
-)
-SELECT k.{id_col} AS {id_col},
-  CASE WHEN EXISTS (SELECT 1 FROM prior_keys q WHERE q.u = k.u)
-       THEN 'changed' ELSE 'new' END AS change
-FROM new_k k
-WHERE NOT EXISTS (
-  SELECT 1 FROM prior_keys q WHERE q.u = k.u AND q.ck = k.ck
-)
-"""

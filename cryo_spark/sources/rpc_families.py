@@ -851,7 +851,7 @@ class StressFakeFactory:
     ``latency_s`` wall-clock and every ``fail_every``-th dispatch
     raises a retryable 429 — exercising pacing, JSON-RPC batch
     dispatch, retry/backoff, and eth_getLogs re-splitting at
-    work-list scale (tools/stress_online.py; results in SCALE.md)."""
+    work-list scale (results in SCALE.md)."""
 
     def __init__(self, log_path: str, latency_s: float = 0.001,
                  fail_every: int = 0):

@@ -11,39 +11,27 @@ expresses the same loop natively (SURVEY §2.10):
   discovered incrementally via the streaming file index,
 - the reorg buffer maps to a watermark on block timestamp: late
   (re-orged / re-fetched) rows inside the buffer update their window,
-  older ones are dropped,
-- sink: `foreachBatch` reusing the batch freeze writer, so streamed
-  output lands in the same cryo-named chunk files as a batch run —
-  one pipeline definition for backfill + tail.
+  older ones are dropped.
+
+The corpus CLI's ``--stream`` mode reads WARC drops through
+:func:`stream_warc_documents`.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cryo_spark import io as cio
-from cryo_spark import plan as cplan
 from cryo_spark.schemas import get_spec
 
 
-def block_tail(
-    spark: SparkSession,
-    raw_dir: str,
-    table: str = "blocks",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming scan of a landed-raw directory. Schema comes from the
-    dataset registry (streams cannot infer), so the stream and the
-    batch transforms agree."""
-    spec = get_spec(table)
-    reader = spark.readStream.schema(spec.spark_schema())
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(raw_dir)
+def block_tail(spark: SparkSession, raw_dir: str) -> DataFrame:
+    """Streaming scan of a landed-raw blocks directory. Schema comes
+    from the dataset registry (streams cannot infer), so the stream
+    and the batch transforms agree."""
+    spec = get_spec("blocks")
+    return spark.readStream.schema(spec.spark_schema()).parquet(raw_dir)
 
 
 def windowed_rollup(
@@ -117,75 +105,6 @@ def running_account_totals(stream: DataFrame):
             update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
     )
-
-
-def chunked_file_sink(
-    datatype: str,
-    output_dir: str,
-    chunk_size: int = cplan.DEFAULT_CHUNK_SIZE,
-    network: str = "ethereum",
-    file_format: str = "parquet",
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch callback writing each micro-batch through the
-    batch freeze writer: chunk-aligned, cryo-named, skip-existing
-    (a chunk file is only written once its blocks have all arrived —
-    partial chunks wait in later batches via overwrite=False +
-    complete-range check)."""
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        if df.isEmpty():
-            return
-        bounds = df.agg(
-            F.min("block_number").alias("lo"), F.max("block_number").alias("hi")
-        ).first()
-        chunks = cplan.subchunk_by_size(
-            [cplan.BlockChunk(start=int(bounds.lo), end=int(bounds.hi))], chunk_size
-        )
-        # only chunk-complete ranges: a chunk is written when the batch
-        # covers its full span (streaming tail writes trailing partial
-        # chunks on a later trigger)
-        counts = {
-            int(r[cio.CHUNK_COL]): r["n"]
-            for r in df.withColumn(cio.CHUNK_COL, cio._chunk_id_expr(chunks))
-            .groupBy(cio.CHUNK_COL).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        ready = [
-            c for i, c in enumerate(chunks) if counts.get(i, 0) >= c.size()
-        ]
-        if not ready:
-            return
-        sink = cio.FileOutput(
-            output_dir=output_dir, prefix=network, format=file_format
-        )
-        cio.write_chunked(df, datatype, ready, sink)
-
-    return write_batch
-
-
-def tail_to_files(
-    spark: SparkSession,
-    raw_dir: str,
-    output_dir: str,
-    table: str = "blocks",
-    chunk_size: int = cplan.DEFAULT_CHUNK_SIZE,
-    checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
-):
-    """End-to-end tail: streaming raw scan → chunk-aligned cryo files.
-    With ``trigger_available_now`` the query drains what exists and
-    stops (the testable/batch-catchup mode); otherwise it runs
-    continuously."""
-    stream = block_tail(spark, raw_dir, table)
-    writer = (
-        stream.writeStream.foreachBatch(chunked_file_sink(table, output_dir, chunk_size))
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or f"{output_dir}/.checkpoint_{table}",
-        )
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_exact_dedup(

@@ -141,18 +141,6 @@ def test_ivf_index_reuse_deterministic(spark, emb):
         assigned.unpersist()
 
 
-def test_embedding_near_dups_lsh(spark):
-    rng = np.random.default_rng(7)
-    v = rng.normal(size=64)
-    v2 = v + rng.normal(scale=0.01, size=64)  # near-dup
-    v3 = rng.normal(size=64)  # unrelated
-    rows = [(1, [float(x) for x in v]), (2, [float(x) for x in v2]), (3, [float(x) for x in v3])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {(r["id_a"], r["id_b"]) for r in dedup.embedding_near_dups(df, threshold=0.95).collect()}
-    assert (1, 2) in got
-    assert (1, 3) not in got
-
-
 def test_bpe_token_count_oracle(spark, docs):
     r = compare(
         text.bpe_token_count(docs), text.bpe_token_count_sql(_docs_rel()), "bpe"

@@ -1088,82 +1088,3 @@ def test_hard_negatives_gemm_nonlong_ids(spark):
 
 
 # ------------------ page-change detection (freshness re-crawls)
-
-
-def test_changed_documents_planted_and_differential(spark):
-    """Freshness semantics: identical content for the same canonical
-    url (scheme/www/whitespace noise included) is dropped; changed
-    content survives as 'changed'; never-seen urls survive as 'new';
-    prior-only urls contribute nothing. And the DuckDB twin agrees on
-    the real documents table with a doctored prior."""
-    import duckdb
-
-    from cryo_spark.operators import web
-
-    prior = spark.createDataFrame(
-        [
-            (1, "https://a.test/page", "stable   content here"),
-            (2, "https://a.test/page", "an older  revision of it"),
-            (3, "http://b.test/doc?utm_source=x", "b content v1"),
-            (4, "https://gone.test/old", "removed page"),
-        ],
-        "doc_id long, url string, text string",
-    )
-    new = spark.createDataFrame(
-        [
-            # same canonical url, same normalized content -> dropped
-            (10, "http://www.a.test/page", "stable content  here"),
-            # matches the OLDER revision too -> dropped
-            (11, "https://a.test/page", "an older revision of it"),
-            # same url, genuinely new content -> 'changed'
-            (12, "https://b.test/doc", "b content v2"),
-            # unseen url -> 'new'
-            (13, "https://c.test/fresh", "brand new page"),
-        ],
-        "doc_id long, url string, text string",
-    )
-    got = {
-        r.doc_id: r.change
-        for r in web.changed_documents(new, prior).collect()
-    }
-    assert got == {12: "changed", 13: "new"}
-
-    # cross-engine differential on the real table: prior = documents
-    # with a third of the texts doctored and a tenth of urls dropped
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.01/documents.parquet"
-    ).withColumn("url", F.concat(F.lit("https://s.test/"), "doc_id"))
-    docs.createOrReplaceTempView("cd_new")
-    prior2 = docs.withColumn(
-        "text",
-        F.when(F.col("doc_id") % 3 == 0, F.concat("text", F.lit(" EDIT")))
-        .otherwise(F.col("text")),
-    ).filter(F.col("doc_id") % 10 != 0)
-    prior2.createOrReplaceTempView("cd_prior")
-    got2 = sorted(
-        (r.doc_id, r.change)
-        for r in web.changed_documents(docs, prior2).collect()
-    )
-    con = duckdb.connect()
-    for t in ("documents",):
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.01/{t}.parquet')"
-        )
-    con.sql(
-        "CREATE VIEW cd_new AS SELECT *, 'https://s.test/' || doc_id AS url "
-        "FROM documents"
-    )
-    con.sql(
-        "CREATE VIEW cd_prior AS SELECT * EXCLUDE text, "
-        "CASE WHEN doc_id % 3 = 0 THEN text || ' EDIT' ELSE text END AS text "
-        "FROM cd_new WHERE doc_id % 10 != 0"
-    )
-    want = sorted(
-        tuple(r)
-        for r in con.sql(
-            web.changed_documents_sql("cd_new", "cd_prior")
-        ).fetchall()
-    )
-    con.close()
-    assert got2 == want and len(got2) > 100

@@ -346,8 +346,8 @@ def test_fetch_transactions_by_hash_batches(spark, tmp_path):
 
 
 def test_stress_factory_429_retries_land_exact_rows(spark, tmp_path):
-    """Contention-path accounting (small-scale twin of
-    tools/stress_online.py): with every 5th POST per task 429ing,
+    """Contention-path accounting (small-scale twin of the 100k-block
+    stress run in SCALE.md): with every 5th POST per task 429ing,
     batches retry whole and the landed rows are still exact."""
     from cryo_spark.sources.rpc import fetch_blocks
 

@@ -1,5 +1,5 @@
-"""Structured Streaming tests: block tail, watermark rollup,
-chunk-aligned file sink — run with availableNow triggers so they
+"""Structured Streaming tests: block tail, watermark rollup, stateful
+and dedup operators — run with availableNow triggers so they
 terminate deterministically."""
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from cryo_spark import api, streaming
+from cryo_spark import streaming
 from cryo_spark.fixtures import default_fixtures_dir
 from cryo_spark.schemas import get_spec
 
@@ -28,16 +28,6 @@ def raw_dir(spark, tmp_path):
         "append"
     ).parquet(d)
     return d
-
-
-def _drop_more(spark, raw_dir, lo, hi):
-    blocks = spark.read.parquet(
-        os.path.join(default_fixtures_dir(), "fixture_blocks.parquet")
-    )
-    cols = get_spec("blocks").column_names()
-    blocks.filter(
-        (F.col("block_number") >= lo) & (F.col("block_number") < hi)
-    ).select(*cols).coalesce(1).write.mode("append").parquet(raw_dir)
 
 
 def test_windowed_rollup_memory_sink(spark, raw_dir, tmp_path):
@@ -121,45 +111,6 @@ def test_running_account_totals_stateful(spark, tmp_path):
         .collect()
     }
     assert got == expect
-
-
-def test_tail_to_chunk_files_incremental(spark, raw_dir, tmp_path):
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-    # drain the first drop: blocks 0-499 -> chunks 0-249 complete,
-    # 250-499 complete (chunk_size 250)
-    q = streaming.tail_to_files(
-        spark, raw_dir, out, chunk_size=250, checkpoint_dir=ckpt
-    )
-    q.awaitTermination(120)
-    files = sorted(os.listdir(out))
-    assert "ethereum__blocks__00000000_to_00000249.parquet" in files
-    assert "ethereum__blocks__00000250_to_00000499.parquet" in files
-
-    # tail grows: drop blocks 500-999, restart from the checkpoint —
-    # only the new files are processed, existing outputs untouched
-    _drop_more(spark, raw_dir, 500, 1000)
-    mtime_before = os.path.getmtime(
-        os.path.join(out, "ethereum__blocks__00000000_to_00000249.parquet")
-    )
-    q2 = streaming.tail_to_files(
-        spark, raw_dir, out, chunk_size=250, checkpoint_dir=ckpt
-    )
-    q2.awaitTermination(120)
-    files = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
-    assert len([f for f in files if f.startswith("ethereum__blocks")]) == 4
-    assert os.path.getmtime(
-        os.path.join(out, "ethereum__blocks__00000000_to_00000249.parquet")
-    ) == mtime_before
-
-    # streamed output == batch collect output, row for row (compare on
-    # non-u256 columns: collect() expands u256 into view columns)
-    cols = ["block_number", "block_hash", "timestamp", "gas_used", "author"]
-    streamed = spark.read.parquet(
-        os.path.join(out, "ethereum__blocks__00000250_to_00000499.parquet")
-    ).select(*cols)
-    batch = api.collect(spark, "blocks", blocks="250:500", columns=cols)
-    assert sorted(map(tuple, streamed.collect())) == sorted(map(tuple, batch.collect()))
 
 
 def test_events_hourly_stream_matches_scored_batch_entry(spark, tmp_path):
